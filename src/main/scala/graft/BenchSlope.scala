@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Scale-slope check (round-8 verdict ask #6): run every headline
@@ -51,7 +53,7 @@ object BenchSlope {
     // one warm pass at sf0.001 (JIT/codegen), as Bench does
     benched.foreach { case (_, fn) =>
       try runFully(fn(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       finally spark.catalog.clearCache()
     }
 
@@ -60,7 +62,7 @@ object BenchSlope {
       def once(): Double = {
         val t0 = System.nanoTime()
         try { runFully(fn(spark, dir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case NonFatal(_) => -1.0 }
       }
       val (a, b) = (once(), once())
       spark.catalog.clearCache()
@@ -96,7 +98,7 @@ object BenchSlope {
       if (only.isEmpty) "bench_slope.json" else "bench_slope_partial.json"
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[slope] write failed: ${e.getMessage}")
     }
     val worst = rows.filter(_._4 > 0).sortBy(-_._4).take(10)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,7 +32,7 @@ object Verify {
     try {
       queries.AdsbQueries.writeOracleBase(spark, oracleBase)
       queries.DocQueries.writeOracleBase(spark, oracleBase, sfDir)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[verify] oracle base dump failed: ${e.getMessage}")
     }
     // Optional extra args: run only these query names (iteration aid;
@@ -54,7 +55,7 @@ object Verify {
         timings(name) = (System.nanoTime() - t0) / 1e9
         System.err.println(
           f"[verify] $name ok in ${timings(name)}%.1fs")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         // A throwing query must stay VISIBLE in the round artifact: a
         // skipped dump would silently vanish from the driver's compare
         // (round 6 read "82/82 pass" while 25 queries errored). Write a
@@ -68,7 +69,7 @@ object Verify {
           import spark.implicits._
           Seq(msg).toDF("_error").coalesce(1)
             .write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
+        } catch { case NonFatal(e2) =>
           System.err.println(s"[verify] $name marker write failed: ${e2.getMessage}")
         }
       } finally spark.catalog.clearCache() // per-query caches don't leak

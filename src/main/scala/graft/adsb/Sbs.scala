@@ -83,9 +83,11 @@ object Sbs {
         col("value").rlike(MessageRegex))
       .withColumn("m", f)
       // P1/P2 analog for the timestamp: a line whose date/time fields
-      // match the regex but parse to no valid timestamp (2-digit
-      // millis, an invalid calendar date) is DROPPED, not admitted
-      // with a NULL gen_date_time that would NPE the state machine.
+      // match the regex but parse to no valid timestamp (an invalid
+      // calendar date such as 2019/02/30, or a fraction of 4 or more
+      // digits) is DROPPED, not admitted with a NULL gen_date_time
+      // that would NPE the state machine. A 1-3 digit fraction parses
+      // as a fraction of a second: `…:10.45` is 450 ms.
       .where(ts(col("m.gen_date"), col("m.gen_time")).isNotNull)
       .select(
         col("seq"),

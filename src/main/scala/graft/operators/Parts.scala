@@ -30,11 +30,18 @@ object Parts {
 
   /** Partition count for loop state derived from the measured bytes
     * of `df`, which must already be eagerly checkpointed. An
-    * unmeasurable frame (no blocks found) counts as tiny → 1. */
+    * unmeasurable frame (no blocks found: lost or evicted) falls back
+    * to `spark.sql.shuffle.partitions` — its size is unknown, not
+    * tiny, and one partition would serialize a large frame. */
   def forCheckpointed(df: DataFrame): Int = {
     val bytes = Bridge.checkpointedBytes(df)
-    val advisory = math.max(1L, Bridge.advisoryPartitionBytes(df.sparkSession))
-    math.max(1L, (bytes + advisory - 1L) / advisory).toInt
+    if (bytes == 0L)
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    else {
+      val advisory =
+        math.max(1L, Bridge.advisoryPartitionBytes(df.sparkSession))
+      ((bytes + advisory - 1L) / advisory).toInt
+    }
   }
 
   /** Re-pin an eagerly checkpointed frame to hash(`key`) at the

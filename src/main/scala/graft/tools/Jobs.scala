@@ -2,6 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -60,7 +62,7 @@ object Jobs {
       .foreach { case (n, f) =>
         // one unmeasured warm run (memoized indexes/dicts build here)
         try f(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         spark.catalog.clearCache()
         drain()
         val (j0, s0, t0, r0, c0) = (jobs.get, stages.get, tasks.get,
@@ -74,7 +76,7 @@ object Jobs {
             f"stages=${stages.get - s0} tasks=${tasks.get - t0} " +
             f"taskRunSec=${(runMs.get - r0) / 1e3}%.2f " +
             f"taskCpuSec=${(cpuNs.get - c0) / 1e9}%.2f wall=$wall%.2f")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           println(s"[jobs] $n FAILED: ${e.toString.take(300)}")
         }
         spark.catalog.clearCache()

@@ -1,4 +1,7 @@
 package graft.tools
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -18,7 +21,7 @@ object Probe {
       try {
         val c = f(spark, dir).count()
         println(f"[probe] $n rows=$c in ${(System.nanoTime()-t0)/1e9}%.1fs")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"[probe] $n FAILED: ${e.toString.take(500)}")
       }
     }

@@ -1,5 +1,6 @@
 package graft.tools
 import java.nio.file.Files
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.streaming.AdsbStream
 object ProbeStream {
@@ -29,7 +30,7 @@ object ProbeStream {
     AdsbStream.prunePositionsLive(spark, outDir, retentionDays = 1)
     val live = spark.read.parquet(s"$outDir/positions_live")
     println("[ps] positions_live after prune (2019 partitions dropped): " +
-      (try live.count() catch { case _: Throwable => 0L }))
+      (try live.count() catch { case NonFatal(_) => 0L }))
     spark.stop()
   }
 }

@@ -57,6 +57,22 @@ class SbsParserSpec extends SparkSpec {
     assert(n === 2070)
   }
 
+  test("timestamps: short fractions parse, bad dates and long fractions drop") {
+    import spark.implicits._
+    def line(date: String, time: String) =
+      s"MSG,3,1,1,40757F,1,$date,$time,2019/10/20,11:33:40.311," +
+        ",5000,,,46.65470,-2.77776,,,0,,0,0"
+    val parsed = Sbs.parse(Seq(
+      line("2019/10/20", "11:33:10.45"),   // 2 digits: 450 ms
+      line("2019/10/20", "11:33:10.4"),    // 1 digit: 400 ms
+      line("2019/02/30", "11:33:10.450"),  // invalid calendar date
+      line("2019/10/20", "11:33:10.4500")  // 4-digit fraction
+    ).toDF("value")).orderBy("seq").collect()
+    assert(parsed.map(_.getTimestamp(6)).toSeq === Seq(
+      java.sql.Timestamp.valueOf("2019-10-20 11:33:10.45"),
+      java.sql.Timestamp.valueOf("2019-10-20 11:33:10.4")))
+  }
+
   test("P5 full filter surface: conjunction of enabled sub-tests") {
     import org.apache.spark.sql.functions.col
     val df = Sbs.parse(Sbs.fixtureLines(spark, "adsb_messages_ok.txt"))

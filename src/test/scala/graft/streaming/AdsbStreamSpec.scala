@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
 import graft.adsb.{AdsbPipeline, Sbs}
@@ -90,6 +91,167 @@ class AdsbStreamSpec extends SparkSpec {
     val ev = table("events_live").collect()
     assert(ev.length === 5)
     assert(ev.map(_.getAs[Long]("batch_id")).distinct.length === 2)
+  }
+
+  /** An airborne MSG3 position line for `hex`, `sec` seconds after
+    * 2019-10-20 11:00:00. */
+  private def sbsPosition(hex: String, sec: Long): String = {
+    val t = java.time.LocalDateTime.of(2019, 10, 20, 11, 0).plusSeconds(sec)
+    val d = t.format(java.time.format.DateTimeFormatter.ofPattern(
+      "yyyy/MM/dd,HH:mm:ss.SSS"))
+    s"MSG,3,1,1,$hex,1,$d,$d,,5000,,,47.1,-1.6,,,0,,0,0"
+  }
+
+  private def partitions(outDir: String, table: String): Set[String] =
+    Option(new java.io.File(s"$outDir/$table").listFiles).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+
+  test("start(): a positions-only micro-batch runs 2 jobs, no event tables") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val lines = MemoryStream[String]
+    val outDir = Files.createTempDirectory("graft-sink-jobs").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-jobs").toString
+    // (query id, micro-batch id) of every job, from the job properties
+    // the stream execution sets; listener events arrive on one thread
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties);
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          jobs += p.getProperty("sql.streaming.queryId") -> b
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = AdsbStream.start(lines.toDF(), outDir, ckpt)
+      lines.addData((0 until 20).map(i => sbsPosition("AAAAAA", i)))
+      q.processAllAvailable()
+      q.stop()
+      org.apache.spark.sql.graftbridge.Bridge
+        .drainListenerBus(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$outDir/positions").count() === 20)
+    assert(spark.read.parquet(s"$outDir/positions_live").count() === 20)
+    val batch0 = jobs.count(_ == (q.id.toString -> "0"))
+    assert(batch0 >= 1 && batch0 <= 2, s"jobs of micro-batch 0: $batch0")
+    assert(partitions(outDir, "positions") === Set("batch_id=0"))
+    assert(Seq("flights", "landings", "takeoffs")
+      .forall(partitions(outDir, _).isEmpty))
+  }
+
+  /** The timeout test's pattern on raw lines: A transmits, B 20 min
+    * later pushes the watermark past A's 300 s timeout, and the
+    * micro-batch after B's, which has no input rows, closes A's
+    * session. Stops `q` once `written` holds. */
+  private def timeOutSession(lines: MemoryStream[String], q: StreamingQuery)(
+      written: => Boolean): Unit = {
+    for (d <- Seq(sbsPosition("AAAAAA", 0), sbsPosition("BBBBBB", 1200))) {
+      lines.addData(d)
+      q.processAllAvailable()
+    }
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!written) {
+      assert(System.nanoTime() < deadline, "A's session never closed")
+      Thread.sleep(50)
+    }
+    q.stop()
+  }
+
+  test("start(): the micro-batch that times a session out writes flights") {
+    implicit val sqlCtx = spark.sqlContext
+    val lines = MemoryStream[String]
+    val outDir = Files.createTempDirectory("graft-sink-flight").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-flight").toString
+    timeOutSession(lines, AdsbStream.start(lines.toDF(), outDir, ckpt))(
+      partitions(outDir, "flights").nonEmpty)
+    val flights = spark.read.parquet(s"$outDir/flights").collect()
+    assert(flights.map(_.getAs[String]("hexident")).toSeq === Seq("AAAAAA"))
+    val n = s"batch_id=${flights.head.getAs[Any]("batch_id")}"
+    assert(partitions(outDir, "flights") === Set(n))
+    // that batch had the flight and nothing else to write
+    val positions = partitions(outDir, "positions")
+    assert(positions.size === 2 && !positions(n))
+    assert(partitions(outDir, "landings").isEmpty)
+    assert(partitions(outDir, "takeoffs").isEmpty)
+  }
+
+  test("startJdbc(): a batch without positions still writes its flight") {
+    implicit val sqlCtx = spark.sqlContext
+    val lines = MemoryStream[String]
+    val ckpt = Files.createTempDirectory("graft-jdbc-flight-ckpt").toString
+    val db = Files.createTempDirectory("graft-jdbc-flight").resolve("db")
+    val url = s"jdbc:derby:$db;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("user", "app"); props.setProperty("password", "app")
+    def table(name: String) = spark.read.jdbc(url, name, props)
+    timeOutSession(lines,
+      AdsbStream.startJdbc(lines.toDF(), url, "app", "app", ckpt))(
+      scala.util.Try(table("flights_live").count() > 0).getOrElse(false))
+    val flights = table("flights_live").select("hexident", "batch_id")
+      .as[(String, Long)].collect()
+    assert(flights.map(_._1).toSeq === Seq("AAAAAA"))
+    val positions = table("positions_live").select("batch_id").as[Long]
+      .collect()
+    assert(positions.length === 2 && !positions.contains(flights.head._2))
+  }
+
+  test("start(): replaying the last epoch from its checkpoint changes no table") {
+    val drop = Files.createTempDirectory("graft-replay-in")
+    val outDir = Files.createTempDirectory("graft-replay-out").toString
+    val ckpt = Files.createTempDirectory("graft-replay-ckpt").toString
+    val raw = Sbs.fixtureLines(spark, "adsb_golden_landings.txt")
+      .select("value").as[String].collect()
+    val (chunk1, chunk2) = raw.partition(l =>
+      l.contains("AAA111") || l.contains("BBB222"))
+    val tables = Seq("positions", "positions_live", "flights", "landings",
+      "takeoffs")
+    def snapshot() = tables.map { t =>
+      // a table with no partition directory has no rows to read
+      t -> (if (!Option(new java.io.File(s"$outDir/$t").listFiles)
+          .exists(_.exists(_.isDirectory))) Seq.empty
+        else spark.read.parquet(s"$outDir/$t").collect().toSeq)
+    }.toMap
+    // no-data micro-batches off: the last epoch is the one with events
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val q1 = AdsbStream.start(
+        AdsbStream.fileLines(spark, drop.toString), outDir, ckpt)
+      for ((c, i) <- Seq(chunk1, chunk2).zipWithIndex) {
+        // written aside, then moved in whole: the source never lists
+        // a half-written chunk
+        val f = Files.write(Files.createTempFile("graft-replay", ".txt"),
+          c.mkString("\n").getBytes("UTF-8"))
+        Files.move(f, drop.resolve(s"chunk-$i.txt"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        q1.processAllAvailable()
+      }
+      q1.stop()
+      val before = snapshot()
+      assert(Seq("positions", "positions_live", "landings", "takeoffs")
+        .forall(before(_).nonEmpty))
+      val commits = new java.io.File(ckpt, "commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(last === 1L)
+      Seq(s"$last", s".$last.crc").foreach(f =>
+        new java.io.File(commits, f).delete())
+      val q2 = AdsbStream.start(
+        AdsbStream.fileLines(spark, drop.toString), outDir, ckpt)
+      q2.processAllAvailable()
+      q2.stop()
+      assert(new java.io.File(commits, s"$last").exists)
+      val after = snapshot()
+      for (t <- tables) {
+        assert(after(t).size === before(t).size, t)
+        assert(after(t).diff(before(t)).isEmpty, t)
+        assert(after(t).distinct.size === after(t).size, s"$t duplicates")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("supervise restarts a failed query from checkpoint (S1 resilience)") {
