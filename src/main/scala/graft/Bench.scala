@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds at the
@@ -84,7 +86,7 @@ object Bench {
     val benched = (SparkEntry.queries - "d3_ngram_jaccard")
       .filter { case (name, _) => only.isEmpty || only(name) }
     benched.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try runFully(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try runFully(fn(spark, warmDir)) catch { case NonFatal(_) => () }
       finally spark.catalog.clearCache()
     }
 
@@ -124,7 +126,7 @@ object Bench {
           java.nio.file.Paths.get("/proc/stat")).get(0)
         val f = line.trim.split("\\s+").drop(1).map(_.toLong)
         (f(0) + f(1) + f(2) + f(5) + f(6) + f(7)) * 10L
-      } catch { case _: Throwable => -1L }
+      } catch { case NonFatal(_) => -1L }
     def procCpuNanos(): Long =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
         case os: com.sun.management.OperatingSystemMXBean =>
@@ -140,7 +142,7 @@ object Bench {
       val t0 = System.nanoTime()
       val r = try { runFully(fn(spark, sfDir))
         Right((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         Left((e.getClass.getSimpleName + ": " +
           Option(e.getMessage).getOrElse(""))
           .filter(c => c >= ' ' && c <= '~' && c != '"' && c != '\\')
@@ -330,7 +332,7 @@ object Bench {
           } catch {
             case _: java.nio.file.NoSuchFileException =>
               FloorFile(0L, Map.empty, Map.empty)
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println("[bench] floor parse failed: " +
                 s"${e.getMessage} — session floors reset")
               FloorFile(0L, Map.empty, Map.empty)
@@ -354,7 +356,7 @@ object Bench {
         try java.nio.file.Files.writeString(floorPath,
           s"""{"updated_ms":$nowMs,"floors":${dec3m(floors)},""" +
             s""""prior":${dec3m(prior)},"floor_flags":$flagsJson}""" + "\n")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] floor write failed: ${e.getMessage}")
         }
         (s""","floor":${dec3m(floors)},"floor_prev":${dec3m(prior)}""" +
@@ -386,7 +388,7 @@ object Bench {
     val outFile = if (only.isEmpty) "bench.json" else "bench_partial.json"
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] $outFile write failed: ${e.getMessage}")
     }
     // The driver keeps only the last ~2000 chars of captured output

@@ -30,18 +30,8 @@ object BenchSlope {
   def main(args: Array[String]): Unit = {
     val smallDir = "/root/testdata/sf0.01"
     val bigDir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    QuietLogs()
+    val spark =
+      Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def runFully(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()

@@ -63,8 +63,6 @@ object AdsbPipeline {
     * time-monotone, as real captures are). */
   def process(
       msgs: Dataset[AdsbMsg],
-      below: Int = FlightStateMachine.AltitudeBelow,
-      above: Int = FlightStateMachine.AltitudeAbove,
       arrivalOrder: Boolean = false): Dataset[Out] = {
     val spark = msgs.sparkSession
     import spark.implicits._
@@ -76,7 +74,7 @@ object AdsbPipeline {
       .sortWithinPartitions(sortCols: _*)
       .mapPartitions { it =>
         foldRuns(it, (m: AdsbMsg) => m.hexident)(
-          run => FlightStateMachine.processSorted(run, below, above))
+          FlightStateMachine.processSorted)
       }
   }
 
@@ -107,9 +105,8 @@ object AdsbPipeline {
         col("time"), col("runway"))
 
   /** End-to-end replay of a fixture corpus. */
-  def replayFixture(spark: SparkSession, name: String,
-      below: Int = 100000): Dataset[Out] =
-    process(Sbs.messages(Sbs.fixtureLines(spark, name)), below = below)
+  def replayFixture(spark: SparkSession, name: String): Dataset[Out] =
+    process(Sbs.messages(Sbs.fixtureLines(spark, name)))
 
   /** Register the public-schema table surface as SQL temp views —
     * the reference's `SELECT * FROM flights` experience over a

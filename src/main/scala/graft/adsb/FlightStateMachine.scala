@@ -79,10 +79,14 @@ object FlightStateMachine {
       onground: Option[Boolean],
       runway: Option[String])
 
-  def admissible(m: AdsbMsg, below: Int, above: Int): Boolean =
+  /** P4: may `m` open a session? MSG2 always; MSG3 iff
+    * `AltitudeAbove < altitude < AltitudeBelow`, a NULL altitude
+    * rejected (`flights.py:85-92`, `adsb_parser.py:294-357`). The one
+    * place the altitude band is applied. */
+  def admissible(m: AdsbMsg): Boolean =
     m.transmission_type == 2 ||
       (m.transmission_type == 3 &&
-        m.altitude.exists(a => a < below && a > above))
+        m.altitude.exists(a => a < AltitudeBelow && a > AltitudeAbove))
 
   def newState(m: AdsbMsg): State = {
     val us = micros(m.gen_date_time)
@@ -159,12 +163,7 @@ object FlightStateMachine {
     * session): close on gap, admit, update. Appends 0–3 rows (an
     * expiry flight row, a position, an event) and returns the new
     * state. The single shared transition for batch and streaming. */
-  def step(
-      st: State,
-      m: AdsbMsg,
-      outs: Growable[Out],
-      below: Int,
-      above: Int): State = {
+  def step(st: State, m: AdsbMsg, outs: Growable[Out]): State = {
     var s = st
     // P4 gates ADMISSION ONLY (`flights.py:85-92` CASE B): for a known
     // hexident (CASE A), the reference's manager calls update() for ANY
@@ -178,7 +177,7 @@ object FlightStateMachine {
       s = null
     }
     if (s == null) {
-      if (admissible(m, below, above)) {
+      if (admissible(m)) {
         s = newState(m)
         update(s, m, outs)
       } // else: dropped — unknown aircraft, inadmissible type
@@ -192,14 +191,10 @@ object FlightStateMachine {
     * state, emitting outputs and closing sessions on gaps. Used by the
     * streaming operator's per-batch step (a micro-batch's group is
     * bounded, so a buffered `outs` is fine there). */
-  def fold(
-      initial: Option[State],
-      msgs: Iterator[AdsbMsg],
-      outs: Growable[Out],
-      below: Int = AltitudeBelow,
-      above: Int = AltitudeAbove): Option[State] = {
+  def fold(initial: Option[State], msgs: Iterator[AdsbMsg],
+      outs: Growable[Out]): Option[State] = {
     var st: State = initial.orNull
-    msgs.foreach { m => st = step(st, m, outs, below, above) }
+    msgs.foreach { m => st = step(st, m, outs) }
     Option(st)
   }
 
@@ -210,15 +205,13 @@ object FlightStateMachine {
     * flows through a ≤3-row pending queue instead of an ArrayBuffer.
     * The final session closes when the input is exhausted. */
   def processSorted(
-      msgs: Iterator[AdsbMsg],
-      below: Int = AltitudeBelow,
-      above: Int = AltitudeAbove): Iterator[Out] = new Iterator[Out] {
+      msgs: Iterator[AdsbMsg]): Iterator[Out] = new Iterator[Out] {
     private val pending = mutable.Queue.empty[Out]
     private var st: State = null
     private var closed = false
     private def advance(): Unit = {
       while (pending.isEmpty && msgs.hasNext)
-        st = step(st, msgs.next(), pending, below, above)
+        st = step(st, msgs.next(), pending)
       if (pending.isEmpty && !closed && !msgs.hasNext) {
         closed = true
         if (st != null) { pending += flightRow(st); st = null }

@@ -279,22 +279,6 @@ object Meta {
       ring(closed, precision), lit("]}"))
   }
 
-  /** Ray-cast point-in-polygon as a pure Column expression (no UDF):
-    * fold over the ring edges with `aggregate`, toggling a crossing
-    * flag — stays inside codegen. Boundary points excluded (shapely
-    * `contains` parity, `airports.py:44-49`). */
-  def pointInPolygon(x: Column, y: Column, pts: Column): Column = {
-    val n = size(pts)
-    val idx = sequence(lit(0), n - 1)
-    aggregate(idx, lit(false), (acc, i) => {
-      val a = element_at(pts, i + 1)
-      val b = element_at(pts, when(i === 0, n).otherwise(i))
-      val cross = (a("y") > y) =!= (b("y") > y) &&
-        x < (b("x") - a("x")) * (y - a("y")) / (b("y") - a("y")) + a("x")
-      when(cross, !acc).otherwise(acc)
-    })
-  }
-
   private def xy(df: DataFrame): DataFrame =
     df.withColumn("bbox", transform(col("bbox"),
       p => struct(p("_1").as("x"), p("_2").as("y"))))

@@ -113,60 +113,6 @@ object Sbs {
         asBool(col("m.onground")).as("onground"))
   }
 
-  /** P4/P5: altitude band filter — keep iff above < altitude < below;
-    * NULL altitude rejected (strict mode), `adsb_parser.py:294-357`. */
-  def altitudeFilter(altitude: Column, below: Int = 100000,
-      above: Int = -1000): Column =
-    altitude.isNotNull && altitude < below && altitude > above
-
-  /** P5: the reference's full declared filter surface
-    * (`adsb_parser.py:296-313` — only altitude was implemented there,
-    * the rest were TODO parameters; all are realized here). `filter()`
-    * is the conjunction of every enabled sub-test; strict mode rejects
-    * rows whose tested field is NULL. */
-  final case class MessageFilter(
-      below: Int = 100000,
-      above: Int = -1000,
-      radiusM: Option[Double] = None,
-      refLon: Double = 0.0,
-      refLat: Double = 0.0,
-      faster: Option[Int] = None,
-      slower: Option[Int] = None,
-      rising: Option[Boolean] = None,
-      descending: Option[Boolean] = None,
-      onground: Option[Boolean] = None,
-      strict: Boolean = true) {
-
-    private def test(c: Column, pred: Column => Column): Column =
-      when(c.isNull, lit(!strict)).otherwise(pred(c))
-
-    /** Equirectangular small-angle distance from the reference point,
-      * meters — adequate for receiver-radius tests (≤ a few 100 km). */
-    private def distM(lon: Column, lat: Column): Column = {
-      val kx = math.cos(math.toRadians(refLat)) * 111320.0
-      val dx = (lon - refLon) * kx
-      val dy = (lat - refLat) * 111320.0
-      sqrt(dx * dx + dy * dy)
-    }
-
-    def filter(df: org.apache.spark.sql.DataFrame): Column = {
-      val tests = Seq(
-        Some(test(col("altitude"), a => a < below && a > above)),
-        radiusM.map(r => when(col("longitude").isNull ||
-          col("latitude").isNull, lit(!strict))
-          .otherwise(distM(col("longitude"), col("latitude")) <= r)),
-        faster.map(f => test(col("speed"), _ > f)),
-        slower.map(sl => test(col("speed"), _ < sl)),
-        rising.map(r => test(col("verticalrate"),
-          v => if (r) v > 0 else v <= 0)),
-        descending.map(d => test(col("verticalrate"),
-          v => if (d) v < 0 else v >= 0)),
-        onground.map(o => test(col("onground"), _ === o))
-      ).flatten
-      tests.reduce(_ && _)
-    }
-  }
-
   /** Read one of the bundled fixture corpora (reference `src/tests`
     * txt files, pure data) as a lines DataFrame. */
   def fixtureLines(spark: SparkSession, name: String): DataFrame = {

@@ -246,17 +246,6 @@ object Dedup {
       .groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** MinHash signatures as a table: (id, sig array<long>), seed order. */
-  def minhashSignatures(
-      docs: DataFrame,
-      idCol: Column,
-      textCol: Column,
-      n: Int,
-      numHashes: Int): DataFrame =
-    minhashMinColumns(shingleRows(docs, idCol, textCol, n), numHashes)
-      .select(col("id"),
-        array((0 until numHashes).map(k => col(s"mh$k")): _*).as("sig"))
-
   /** LSH candidate pairs: band the signature, bucket-join within bands,
     * emit distinct (id_a < id_b) candidates. `bands` must divide
     * `numHashes`. This is the scale path: cost is Σ per-bucket pairs,

@@ -150,19 +150,6 @@ object Multimodal {
       .withColumn("width", lit(w))
       .withColumn("height", lit(hgt))
 
-  /** Frame sampling for video rows: explode k pseudo-frames per blob
-    * (real impl decodes I-frames). Fan-out happens AFTER metadata
-    * filters so only selected rows pay the explosion. */
-  def sampleFrames(df: DataFrame, bin: Column, k: Int): DataFrame =
-    df.withColumn("frame_no", explode(sequence(lit(0), lit(k - 1))))
-      .withColumn("frame",
-        sha2(concat(base64(bin), col("frame_no").cast("string")), 256))
-
-  /** Partition-for-decode: spread rows evenly for the expensive decode
-    * stage regardless of input file layout. */
-  def repartitionForDecode(df: DataFrame, parallelism: Int): DataFrame =
-    df.repartition(parallelism)
-
   /** STUB decoder: deterministic, ENGINE-PORTABLE pseudo-features —
     * dimension i is the md5-derived 60-bit hash of (hex(bytes), i)
     * scaled to [0,1) (the [[graft.functions.PortableHash]]

@@ -57,25 +57,6 @@ object Sessionize {
         max(timeCol.cast("timestamp")).cast("timestamp_ntz").as("session_end"),
         count(lit(1)).as("n_events"))
 
-  /** `session_window`-based summary — the streaming-compatible
-    * alternative shape for T1 (works under `groupBy` in Structured
-    * Streaming with a watermark, no custom state). Boundary nuance vs
-    * [[sessionSummary]]: `session_window` splits at gap ≥ gapSec,
-    * the explicit window variant at gap > gapSec. */
-  def sessionWindowSummary(
-      df: DataFrame,
-      keyCol: Column,
-      timeCol: Column,
-      gapSec: Long): DataFrame =
-    df.groupBy(
-        session_window(timeCol.cast("timestamp"), s"$gapSec seconds"),
-        keyCol.as("key"))
-      .agg(
-        min(timeCol.cast("timestamp")).cast("timestamp_ntz").as("session_start"),
-        max(timeCol.cast("timestamp")).cast("timestamp_ntz").as("session_end"),
-        count(lit(1)).as("n_events"))
-      .drop("session_window")
-
   /** Edge detection with debounce.
     *
     * A candidate is any row whose boolean `flagCol` differs from the

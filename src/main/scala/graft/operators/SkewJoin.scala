@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for shuffle equi-joins.
@@ -53,58 +53,4 @@ object SkewJoin {
         joinType)
       .drop(replicated(otherKey)).drop(replicated("__salt")).drop("__salt")
   }
-
-  /** Production shape at 100 TB: salt ONLY the known-hot keys.
-    * Salting everything replicates the whole lookup side `salts`×;
-    * here the big side splits into hot and cold partitions — hot keys
-    * take the salted path against just their own (tiny, replicated)
-    * lookup rows, everything else takes the plain equi-join — and the
-    * union is the exact plain-join result. `hotKeys` typically comes
-    * from a cheap pre-pass (`groupBy(key).count().orderBy(desc).limit(n)`)
-    * or is known a priori (sentinel ids, boilerplate hashes). */
-  def saltedJoinHotKeys(
-      big: DataFrame,
-      other: DataFrame,
-      bigKey: String,
-      otherKey: String,
-      hotKeys: Seq[Any],
-      salts: Int,
-      joinType: String = "inner"): DataFrame = {
-    val hot = saltedJoin(
-      big.where(col(bigKey).isin(hotKeys: _*)),
-      other.where(col(otherKey).isin(hotKeys: _*)),
-      bigKey, otherKey, salts, joinType)
-    val cold = {
-      val b = big.where(!col(bigKey).isin(hotKeys: _*) || col(bigKey).isNull)
-      val o = other.where(!col(otherKey).isin(hotKeys: _*))
-      b.join(o, b(bigKey) === o(otherKey), joinType).drop(o(otherKey))
-    }
-    hot.unionByName(cold)
-  }
-
-  /** Two-stage skew-safe aggregation: partial-aggregate on
-    * (key, salt) first, then final-aggregate on key. For algebraic
-    * aggregates Spark's own map-side partial aggregation already does
-    * this; the explicit form is for holistic aggregates
-    * (`collect_list`, `collect_set`) where one hot key would
-    * otherwise accumulate its whole group in a single task. */
-  def twoStageCollectSet(
-      df: DataFrame,
-      key: Column,
-      value: Column,
-      salts: Int): DataFrame =
-    // value-hash salt: deterministic under task retries (see saltedJoin),
-    // and duplicate values collapsing into one bucket is harmless here —
-    // collect_set dedups them anyway.
-    df.select(key.as("k"),
-        pmod(xxhash64(key, value), lit(salts.toLong)).as("__salt"),
-        value.as("v"))
-      .groupBy(col("k"), col("__salt"))
-      .agg(collect_set(col("v")).as("vs"))
-      .groupBy(col("k"))
-      // no array_distinct needed: equal (key, value) pairs always hash
-      // to the SAME salt bucket, where collect_set already dedups —
-      // cross-bucket duplicates are impossible by construction, and a
-      // distinct pass over a hot key's merged array is O(n²) dead work
-      .agg(array_sort(flatten(collect_list(col("vs")))).as("values"))
 }

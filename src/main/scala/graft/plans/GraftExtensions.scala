@@ -9,22 +9,16 @@ import graft.functions.DotProductF
 /** Library entry point for the Catalyst extension tier (SURVEY §7.3
   * preference order (c)): one class a user names in
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`) to get
-  *
-  *  - the [[RangeBinJoin]] optimizer rule — interval-containment joins
-  *    become binned equi-joins when
-  *    `spark.graft.rangeJoin.binWidth` is set, with no query rewrite;
-  *  - the native SQL functions, so plain-SQL users (thrift server,
-  *    notebooks) call `dot_product_f(a, b)` without any Scala
-  *    registration step.
+  * `builder.withExtensions(new GraftExtensions)`) to get the native
+  * SQL functions, so plain-SQL users (thrift server, notebooks) call
+  * `dot_product_f(a, b)` without any Scala registration step.
   *
   * Everything injected here is also reachable without extensions
-  * (`operators.RangeJoin`, `DotProduct.register`) — the extension is
-  * the zero-code-change path, not the only path.
+  * (`DotProduct.register`) — the extension is the zero-code-change
+  * path, not the only path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(RangeBinJoin.apply)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }

@@ -5,26 +5,21 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Deterministic cost probe: per query, the number of Spark JOBS,
-  * STAGES and TASKS plus summed task run/CPU time — the scheduling-
-  * overhead mechanism measurement that survives host noise (wall
-  * seconds at this SF swing ±40% run to run; task counts are exact).
-  * Reads SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR like Bench. */
+/** Deterministic cost probe: per query, the result ROWS, the number of
+  * Spark JOBS, STAGES and TASKS plus summed task run/CPU time — the
+  * scheduling-overhead mechanism measurement that survives host noise
+  * (wall seconds at this SF swing ±40% run to run; task counts are
+  * exact). Reads SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR like Bench;
+  * query names as args run a subset. Pointing SPARK_GRAFT_SF_DIR at
+  * the sf0.001 tables gives a quick rows-and-failures smoke pass over
+  * every query:
+  * `SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 sbt "runMain graft.tools.Jobs"`. */
 object Jobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark =
+      graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val jobs = new AtomicLong; val stages = new AtomicLong
     val tasks = new AtomicLong; val runMs = new AtomicLong
     val cpuNs = new AtomicLong
@@ -69,10 +64,10 @@ object Jobs {
           runMs.get, cpuNs.get)
         val w0 = System.nanoTime()
         try {
-          f(spark, sfDir).queryExecution.toRdd.count()
+          val rows = f(spark, sfDir).queryExecution.toRdd.count()
           val wall = (System.nanoTime() - w0) / 1e9
           drain()
-          println(f"[jobs] $n jobs=${jobs.get - j0} " +
+          println(f"[jobs] $n rows=$rows jobs=${jobs.get - j0} " +
             f"stages=${stages.get - s0} tasks=${tasks.get - t0} " +
             f"taskRunSec=${(runMs.get - r0) / 1e3}%.2f " +
             f"taskCpuSec=${(cpuNs.get - c0) / 1e9}%.2f wall=$wall%.2f")

@@ -1,14 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val dir = "/root/testdata/sf0.01"
     args.foreach { n =>
       println(s"######## $n")

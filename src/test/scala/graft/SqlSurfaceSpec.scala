@@ -56,18 +56,4 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(join.length === 1)
     assert(join(0).getString(1) === "FR")
   }
-
-  test("session_window variant agrees with the explicit-window sessionizer") {
-    val ev = Tables.load(spark, dir, "events")
-    val a = graft.operators.Sessionize.sessionSummary(
-      ev, col("user_id"), col("ts"), 1800L, col("event_id"))
-    val b = graft.operators.Sessionize.sessionWindowSummary(
-      ev, col("user_id"), col("ts"), 1800L)
-    // boundary semantics differ only at gaps exactly == gapSec —
-    // absent in this data, so the summaries match.
-    assert(a.select("key", "session_start", "session_end", "n_events")
-      .exceptAll(b.select("key", "session_start", "session_end", "n_events"))
-      .count() === 0)
-    assert(a.count() === b.count())
-  }
 }

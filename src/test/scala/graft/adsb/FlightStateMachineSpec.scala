@@ -34,6 +34,11 @@ class FlightStateMachineSpec extends AnyFunSuite {
   test("MSG3 admission honors the altitude filter") {
     assert(run(msg(3, 0, alt = None)).isEmpty)            // strict null
     assert(run(msg(3, 0, alt = Some(200000))).isEmpty)    // above 'below'
+    // both edges are open: AltitudeAbove < altitude < AltitudeBelow
+    assert(run(msg(3, 0, alt = Some(99999))).map(_.kind) === Seq("flight"))
+    assert(run(msg(3, 0, alt = Some(100000))).isEmpty)
+    assert(run(msg(3, 0, alt = Some(-999))).map(_.kind) === Seq("flight"))
+    assert(run(msg(3, 0, alt = Some(-1000))).isEmpty)     // faulty corpus
     assert(run(msg(3, 0, alt = Some(5000),
       lat = Some(47.0), lon = Some(-1.6))).map(_.kind) ===
       Seq("position", "flight"))

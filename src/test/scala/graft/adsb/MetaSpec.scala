@@ -3,30 +3,13 @@ package graft.adsb
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.adsb.Geometry.Pt
 
-/** Metadata loaders (S4/S5) and the Column-level geometry surface
-  * (Q17): the codegen point-in-polygon expression must agree with the
-  * Scala implementation the state machine uses. */
+/** Metadata loaders (S4/S5) and the Column-level GeoJSON emitters
+  * (Q17). Point-in-polygon is `Geometry.contains`, pinned in
+  * `GeometrySpec`. */
 class MetaSpec extends SparkSpec {
 
   import spark.implicits._
-
-  test("pointInPolygon expression agrees with the Scala ray cast") {
-    val poly = Airports.Nte.bbox
-    val probes = Seq(
-      (-1.61046, 47.15356), (-1.61046, 47.154), (-1.8, 48.0),
-      (-1.60, 47.16), (-1.62, 47.14), (-1.597, 47.1629))
-    val polyLit = typedLit(poly.map(p => (p.x, p.y)))
-    val df = probes.toDF("x", "y")
-      .withColumn("bbox", transform(polyLit,
-        p => struct(p("_1").as("x"), p("_2").as("y"))))
-      .withColumn("in", Meta.pointInPolygon(col("x"), col("y"), col("bbox")))
-    val got = df.collect().map(r => (r.getDouble(0), r.getDouble(1), r.getBoolean(3)))
-    got.foreach { case (x, y, in) =>
-      assert(in === Geometry.contains(poly, Pt(x, y)), s"($x,$y)")
-    }
-  }
 
   test("airlines CSV: \\N nulls, trimmed headers, icao join key") {
     val a = Meta.loadAirlines(spark)
@@ -89,8 +72,6 @@ class MetaSpec extends SparkSpec {
       .withColumn("e", Multimodal.fakeEmbedding(col("silhouette")))
     assert(a.select("model", "width", "height", "e").exceptAll(
       b.select("model", "width", "height", "e")).count() === 0)
-    val frames = Multimodal.sampleFrames(bin, col("silhouette"), 3)
-    assert(frames.count() === 21)
   }
 
   test("BMP headers parse for real: 85x20 silhouettes, 24- and 32-bpp") {

@@ -44,14 +44,6 @@ class SbsParserSpec extends SparkSpec {
     assert(f.map(_.getInt(9)).toSet.subsetOf(Set(-25, -1000)))
   }
 
-  test("altitude filter P4: strict null rejection and open bounds") {
-    import org.apache.spark.sql.functions.col
-    val df = Sbs.parse(Sbs.fixtureLines(spark, "adsb_messages_ok.txt"))
-    val kept = df.where(Sbs.altitudeFilter(col("altitude"), below = 10000))
-      .collect()
-    assert(kept.length === 1) // only the MSG3 with altitude 5000
-  }
-
   test("full stream corpus parses every line (2070, no trailing newline)") {
     val n = Sbs.parse(Sbs.fixtureLines(spark, "adsb_message_stream.txt")).count()
     assert(n === 2070)
@@ -71,23 +63,5 @@ class SbsParserSpec extends SparkSpec {
     assert(parsed.map(_.getTimestamp(6)).toSeq === Seq(
       java.sql.Timestamp.valueOf("2019-10-20 11:33:10.45"),
       java.sql.Timestamp.valueOf("2019-10-20 11:33:10.4")))
-  }
-
-  test("P5 full filter surface: conjunction of enabled sub-tests") {
-    import org.apache.spark.sql.functions.col
-    val df = Sbs.parse(Sbs.fixtureLines(spark, "adsb_messages_ok.txt"))
-    // altitude band + onground=false keeps only the airborne MSG3
-    val f1 = Sbs.MessageFilter(below = 10000, onground = Some(false))
-    assert(df.where(f1.filter(df)).count() === 1)
-    // radius around the MSG3 position keeps it; a far reference drops it
-    val near = Sbs.MessageFilter(below = 10000,
-      radiusM = Some(50000), refLon = -2.77776, refLat = 46.65470)
-    assert(df.where(near.filter(df)).count() === 1)
-    val far = Sbs.MessageFilter(below = 10000,
-      radiusM = Some(1000), refLon = 0.0, refLat = 0.0)
-    assert(df.where(far.filter(df)).count() === 0)
-    // non-strict mode admits NULL-field rows for the tested predicate
-    val lax = Sbs.MessageFilter(strict = false)
-    assert(df.where(lax.filter(df)).count() === 3)
   }
 }

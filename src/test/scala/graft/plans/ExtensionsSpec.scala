@@ -1,181 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
 /** The Catalyst extension tier end-to-end: a session created with
-  * `withExtensions(new GraftExtensions)` rewrites naive
-  * point-in-interval joins into binned equi-joins (conf-gated) and
-  * exposes the native SQL functions — no Scala registration calls. */
+  * `withExtensions(new GraftExtensions)` exposes the native SQL
+  * functions — no Scala registration calls. */
 class ExtensionsSpec extends AnyFunSuite {
 
   private lazy val ext: SparkSession = ExtensionsSpec.session
-
-  private val WidthKey = "spark.graft.rangeJoin.binWidth"
-
-  /** 200 points × 40 intervals incl. NULL bounds, a reversed interval
-    * and an empty one; ids let us compare matched pair sets exactly. */
-  private def fixtures(s: SparkSession): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val points = (0L until 200L).map(i => (i, i * 37 % 1000)).toDF("pid", "t")
-    val base = (0L until 40L).map { i =>
-      val lo = i * 25
-      (i, Option(lo), Option(lo + 40))
-    }
-    val odd = Seq(
-      (100L, Some(990L), Some(30L)),          // reversed: matches nothing
-      (101L, None, Some(500L)),               // NULL lo: matches nothing
-      (102L, Some(500L), None),               // NULL hi: matches nothing
-      (103L, Some(400L), Some(400L)))         // single-point interval
-    val intervals = (base ++ odd).toDF("iid", "lo", "hi")
-    (points, intervals)
-  }
-
-  private def runJoin(s: SparkSession, strict: Boolean = false): Seq[(Long, Long)] = {
-    val (p, i) = fixtures(s)
-    p.createOrReplaceTempView("pts")
-    i.createOrReplaceTempView("ivs")
-    val cmp = if (strict) "pts.t > ivs.lo AND pts.t < ivs.hi"
-              else "pts.t >= ivs.lo AND pts.t <= ivs.hi"
-    s.sql(s"SELECT pid, iid FROM pts JOIN ivs ON $cmp")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-  }
-
-  test("binWidth conf rewrites the BETWEEN join to a binned equi-join") {
-    val baseline = runJoin(SparkSpec.session) // plain session: no rule
-    ext.conf.set(WidthKey, "50")
-    try {
-      val (p, i) = fixtures(ext)
-      p.createOrReplaceTempView("pts")
-      i.createOrReplaceTempView("ivs")
-      val df = ext.sql(
-        "SELECT pid, iid FROM pts JOIN ivs ON pts.t >= ivs.lo AND pts.t <= ivs.hi")
-      val optimized = df.queryExecution.optimizedPlan
-      assert(optimized.collect { case g: Generate => g }.nonEmpty,
-        s"expected bin-explode Generate in:\n$optimized")
-      assert(optimized.toString.contains("__graft_bin_p"))
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(got === baseline)
-      // physical plan is a hash/sort-merge join, not nested-loop
-      val phys = df.queryExecution.executedPlan.toString
-      assert(!phys.contains("BroadcastNestedLoopJoin") &&
-        !phys.contains("CartesianProduct"), phys)
-    } finally ext.conf.unset(WidthKey)
-  }
-
-  test("strict bounds rewrite too and stay exact") {
-    val baseline = runJoin(SparkSpec.session, strict = true)
-    ext.conf.set(WidthKey, "30")
-    try {
-      val got = runJoin(ext, strict = true)
-      assert(got === baseline)
-    } finally ext.conf.unset(WidthKey)
-  }
-
-  test("TIMESTAMP_NTZ interval joins rewrite and stay exact") {
-    // Spark 4 has no direct Cast(NTZ -> BIGINT); the rule must route
-    // through TimestampType or the rewritten plan fails to resolve.
-    import org.apache.spark.sql.functions._
-    def ntzViews(s: SparkSession): Unit = {
-      val (p, i) = fixtures(s)
-      p.withColumn("t", timestamp_seconds(col("t")).cast("timestamp_ntz"))
-        .createOrReplaceTempView("npts")
-      i.withColumn("lo", timestamp_seconds(col("lo")).cast("timestamp_ntz"))
-        .withColumn("hi", timestamp_seconds(col("hi")).cast("timestamp_ntz"))
-        .createOrReplaceTempView("nivs")
-    }
-    val sqlText =
-      "SELECT pid, iid FROM npts JOIN nivs ON npts.t >= nivs.lo AND npts.t <= nivs.hi"
-    ntzViews(SparkSpec.session)
-    val baseline = SparkSpec.session.sql(sqlText)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    ext.conf.set(WidthKey, "50")
-    try {
-      ntzViews(ext)
-      val df = ext.sql(sqlText)
-      assert(df.queryExecution.optimizedPlan
-        .collect { case g: Generate => g }.nonEmpty)
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(got === baseline)
-    } finally ext.conf.unset(WidthKey)
-  }
-
-  test("rule leaves equi-joins and conf-off sessions untouched") {
-    // conf off → no Generate
-    val (p, i) = fixtures(ext)
-    p.createOrReplaceTempView("pts")
-    i.createOrReplaceTempView("ivs")
-    val off = ext.sql(
-      "SELECT pid, iid FROM pts JOIN ivs ON pts.t >= ivs.lo AND pts.t <= ivs.hi")
-    assert(off.queryExecution.optimizedPlan
-      .collect { case g: Generate => g }.isEmpty)
-    // equi conjunct present → rule declines even with conf on
-    ext.conf.set(WidthKey, "50")
-    try {
-      val eq = ext.sql(
-        """SELECT pid, iid FROM pts JOIN ivs
-          |ON pts.pid = ivs.iid AND pts.t >= ivs.lo AND pts.t <= ivs.hi""".stripMargin)
-      assert(eq.queryExecution.optimizedPlan
-        .collect { case g: Generate => g }.isEmpty)
-    } finally ext.conf.unset(WidthKey)
-  }
-
-  test("timestamp columns bin on epoch seconds, residual keeps micros") {
-    import ext.implicits._
-    ext.conf.set(WidthKey, "3600") // one-hour bins
-    try {
-      val pts = Seq(
-        (1L, "2024-05-01 10:00:00.000001"),
-        (2L, "2024-05-01 10:59:59.999999"),
-        (3L, "2024-05-01 11:00:00.000000"),
-        (4L, "2024-05-02 00:00:00.000000"))
-        .toDF("pid", "ts").selectExpr("pid", "cast(ts as timestamp) AS t")
-      val ivs = Seq(
-        (10L, "2024-05-01 10:00:00", "2024-05-01 10:59:59.999998"),
-        (11L, "2024-05-01 10:30:00", "2024-05-01 23:00:00"))
-        .toDF("iid", "lo0", "hi0")
-        .selectExpr("iid", "cast(lo0 as timestamp) AS lo", "cast(hi0 as timestamp) AS hi")
-      pts.createOrReplaceTempView("tpts")
-      ivs.createOrReplaceTempView("tivs")
-      val df = ext.sql(
-        "SELECT pid, iid FROM tpts JOIN tivs ON t >= lo AND t <= hi")
-      assert(df.queryExecution.optimizedPlan
-        .collect { case g: Generate => g }.nonEmpty)
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      // pid=2 at 10:59:59.999999 is OUTSIDE iid=10 (hi ...999998): the
-      // micro-precision residual must reject what the second-bin accepts
-      assert(got === Seq((1L, 10L), (2L, 11L), (3L, 11L)))
-    } finally ext.conf.unset(WidthKey)
-  }
-
-  test("randomized incl. negatives: rewritten join ≡ naive join") {
-    val rnd = new scala.util.Random(42)
-    def mk(s: SparkSession): (DataFrame, DataFrame) = {
-      import s.implicits._
-      rnd.setSeed(42)
-      val pts = (0L until 300L).map(i => (i, rnd.nextLong(2000) - 500))
-        .toDF("pid", "t")
-      val ivs = (0L until 60L).map { i =>
-        val lo = rnd.nextLong(2000) - 500   // negatives: pmod floor path
-        (i, Option(lo), Option(lo + rnd.nextLong(120)))
-      }.toDF("iid", "lo", "hi")
-      (pts, ivs)
-    }
-    def run(s: SparkSession): Seq[(Long, Long)] = {
-      val (p, i) = mk(s)
-      p.createOrReplaceTempView("rpts")
-      i.createOrReplaceTempView("rivs")
-      s.sql("SELECT pid, iid FROM rpts JOIN rivs ON t >= lo AND t <= hi")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    val baseline = run(SparkSpec.session)
-    assert(baseline.nonEmpty)
-    ext.conf.set(WidthKey, "64")
-    try assert(run(ext) === baseline) finally ext.conf.unset(WidthKey)
-  }
 
   test("injected SQL function dot_product_f works with zero registration") {
     val r = ext.sql(
