@@ -7,7 +7,7 @@ package graft
   *
   * The driver parses the LAST line of the captured sbt output, so
   * anything that WARNs per query × per run threatens the JSON tail
-  * window. Three known offenders, each scoped (never a global level
+  * window. Four known offenders, each scoped (never a global level
   * change):
   *  - window: "No Partition Defined" — every global window in the
   *    repo is provably bounded (metadata-sized inputs);
@@ -19,13 +19,19 @@ package graft
   *    single emitting CLASS, not the whole rdd package (round-12,
   *    ADVICE r11 #3): a package-wide ERROR would also hide unrelated
   *    RDD-layer warnings (block replication/eviction) in every
-  *    driver run.
+  *    driver run;
+  *  - CSVHeaderChecker: "CSV header does not conform to the schema" —
+  *    `Meta.loadAirlines` declares the names of a header row written
+  *    with a space after each comma, so every scan of it would log
+  *    the multi-line warning; the header row is skipped, never read
+  *    as names.
   */
 object QuietLogs {
   def apply(): Unit = {
     Seq("org.apache.spark.sql.execution.window",
       "org.apache.spark.sql.execution.CacheManager",
-      "org.apache.spark.rdd.RDD").foreach(
+      "org.apache.spark.rdd.RDD",
+      "org.apache.spark.sql.catalyst.csv.CSVHeaderChecker").foreach(
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         _, org.apache.logging.log4j.Level.ERROR))
   }

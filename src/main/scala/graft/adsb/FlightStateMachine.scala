@@ -42,7 +42,7 @@ object FlightStateMachine {
   val AltitudeAbove = -1000
 
   def micros(t: Timestamp): Long =
-    t.getTime / 1000 * 1000000L + t.getNanos / 1000
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
   def toTs(us: Long): Timestamp = {
     val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
@@ -132,7 +132,7 @@ object FlightStateMachine {
       // A message CARRYING NO onground info (og = None) is a no-op,
       // not a flip: `!v.contains(prev)` would treat None as a state
       // change, reset the debounce clock and emit a phantom event.
-      // Unreachable via Sbs.parse (asBool never yields NULL) but this
+      // Unreachable via Sbs.parse (onground is never NULL) but this
       // is the shared public transition for any message source.
       (st.onground, og) match {
         case (None, v) => st.onground = v

@@ -2,6 +2,7 @@ package graft.adsb
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Metadata dimension loaders + GeoJSON metadata views.
   *
@@ -230,19 +231,25 @@ object Meta {
   /** openflights airlines: join key `icao` = first 3 chars of a flight
     * callsign (`create_graphql_functions.sql:53`). */
   def loadAirlines(spark: SparkSession,
-      path: String = resourcePath("airlines.csv")): DataFrame = {
-    val raw = spark.read
-      .option("header", true).option("quote", "\"")
-      .option("nullValue", "\\N")
-      .csv(path)
-    // header row has spaces after commas: normalize names
-    raw.toDF(raw.columns.map(_.trim): _*)
-  }
+      path: String = resourcePath("airlines.csv")): DataFrame =
+    metaCsv(spark, path,
+      "id", "name", "alias", "iata", "icao", "callsign", "country", "active")
 
   def loadCountries(spark: SparkSession,
       path: String = resourcePath("countries.csv")): DataFrame =
-    spark.read.option("header", true).option("quote", "\"")
-      .option("nullValue", "\\N").csv(path)
+    metaCsv(spark, path,
+      "id", "code", "name", "continent", "wikipedia_link", "keywords")
+
+  /** A metadata CSV as all-string columns named as in its header row,
+    * which is skipped: a declared schema needs no header-scan job when
+    * the frame is defined. `\N` is NULL. */
+  private def metaCsv(spark: SparkSession, path: String,
+      columns: String*): DataFrame =
+    spark.read
+      .schema(StructType(columns.map(StructField(_, StringType))))
+      .option("header", true).option("quote", "\"")
+      .option("nullValue", "\\N")
+      .csv(path)
 
   /** S5: silhouette BMPs as (model, silhouette) binary rows. */
   def loadAircraftSilhouettes(spark: SparkSession, dir: String): DataFrame =

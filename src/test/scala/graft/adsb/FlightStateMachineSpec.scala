@@ -149,4 +149,18 @@ class FlightStateMachineSpec extends AnyFunSuite {
     val r = run(msg(2, 0), msg(6, 50), msg(7, 99))
     assert(r.find(_.kind == "flight").get.last_seen.contains(at(99)))
   }
+
+  test("micros inverts toTs on both sides of the epoch") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // floor, not truncation: 0.5 ms before the epoch is -500 µs
+    assert(micros(new Timestamp(-500)) === -500000L)
+    val us = Gen.oneOf(
+      Gen.choose(-2000000L, 2000000L),                   // around 1970
+      Gen.choose(-62167219200000000L, 253402300799999999L)) // years 0-9999
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20000),
+      Prop.forAll(us)(u => micros(toTs(u)) == u))
+    assert(result.passed, result.status)
+  }
 }
+

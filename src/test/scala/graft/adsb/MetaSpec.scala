@@ -1,6 +1,7 @@
 package graft.adsb
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.SparkSpec
 
@@ -16,6 +17,36 @@ class MetaSpec extends SparkSpec {
     assert(a.columns.toSeq.contains("icao"))
     assert(a.where(col("icao") === "IBE").count() >= 1)
     assert(a.where(col("alias").isNull).count() > 0)
+  }
+
+  test("defining the airlines and countries frames runs no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "meta-definition"
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (a, c) = try {
+      spark.sparkContext.setJobGroup(group, group)
+      try (Meta.loadAirlines(spark), Meta.loadCountries(spark))
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      org.apache.spark.sql.graftbridge.Bridge
+        .drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs === 0)
+    assert(a.columns.toSeq === Seq("id", "name", "alias", "iata", "icao",
+      "callsign", "country", "active"))
+    assert(c.columns.toSeq ===
+      Seq("id", "code", "name", "continent", "wikipedia_link", "keywords"))
+    assert((a.schema ++ c.schema).forall(_.dataType == StringType))
+    // the header rows are skipped, not read as data
+    assert(a.where(col("id") === "id").isEmpty)
+    assert(c.where(col("id") === "id").isEmpty)
   }
 
   test("silhouette binary loader keys by filename stem") {
