@@ -94,6 +94,7 @@ object Verify {
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))
+    System.err.println(s"[verify] ${Memo.report}")
     spark.stop()
   }
 }

@@ -38,27 +38,21 @@ object Dedup {
     *    cache catalog until `clearCache()`/`unpersist` — the gate
     *    harness clears per query; a resident service should run the
     *    checkpoint mode or clear explicitly.
-    *  - `none` — no materialization: every consumer branch recomputes
-    *    the subtree below (the distinct's exchange is still reused
-    *    WITHIN one stage tree where canonically identical).
     * Measured at sf0.1 (local[32], min-of-2, round 7):
-    * d3v 1.00 s cache / 1.47 checkpoint / 1.60 none;
-    * p7 1.46 / 1.88 / 1.34; d9 1.55 / 2.04 / 2.93 — cache is the
-    * default (d3v/p7 back under their round-5 cache-era mins; the
-    * round-6 checkpoint swap cost +45-30% on these, VERDICT r6 #3),
-    * the harness clears per query, and `checkpoint` remains the
-    * documented resident-service mode. */
+    * d3v 1.00 s cache / 1.47 checkpoint; p7 1.46 / 1.88;
+    * d9 1.55 / 2.04 — cache is the default (d3v/p7 back under their
+    * round-5 cache-era mins; the round-6 checkpoint swap cost +45-30%
+    * on these, VERDICT r6 #3), the harness clears per query, and
+    * `checkpoint` remains the documented resident-service mode. */
   private[graft] def share(df: DataFrame): DataFrame =
-    sys.env.getOrElse("GRAFT_SHARE_MODE",
-      sys.props.getOrElse("graft.share.mode", "cache")) match {
+    sys.props.getOrElse("graft.share.mode", "cache") match {
       case "checkpoint" => df.localCheckpoint(false)
-      case "none" => df
       case "cache" => df.persist()
       // fail loudly: a typo'd mode silently falling back to cache
       // would reintroduce exactly the cache-catalog accumulation the
       // checkpoint mode exists to prevent in resident services
       case other => throw new IllegalArgumentException(
-        s"unknown share mode '$other' (cache | checkpoint | none)")
+        s"unknown share mode '$other' (cache | checkpoint)")
     }
 
   /** maintenance.sql keep-one-per-group: keeps the first row of each

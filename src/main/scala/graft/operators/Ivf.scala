@@ -314,53 +314,18 @@ object Ivf {
   /** Rebuild the driver-side codebook from a [[persist]]ed index's
     * quantizer sidecar (norms recomputed — they are derived data).
     *
-    * Memoized per quantizer directory, keyed by the directory's FILE
-    * LISTING signature (sorted name:length:mtime — round-15): the
-    * sidecar is index METADATA read by every serve call, and the
-    * parquet read + collect was a full driver job per search. The
-    * listing key makes the memo SELF-INVALIDATING against every
-    * mutation path — [[persist]] overwrites and the
-    * [[IndexMaintenance]] rebuild/swap machinery stage-renames, and
-    * parquet part files carry fresh UUID names on any rewrite, so a
-    * swapped quantizer can never serve a stale codebook (the s19
-    * continuity property RebuildSpec pins). A listing failure falls
-    * back to the direct read, which surfaces the real error.
-    *
-    * BOUNDED (round-16, ADVICE r15): at most [[codebookMemoCap]]
-    * directories stay memoized (insertion-order eviction — a
-    * resident service creating ephemeral staged index paths must not
-    * leak k×dim float arrays per path for process lifetime). The
-    * returned array is the CACHED instance and is READ-ONLY by
-    * contract: every caller treats it as immutable model state; an
-    * in-place sort/scale would poison later serves. */
-  private[operators] val codebookMemoCap = 64
-  private[operators] val codebookMemo = new java.util.LinkedHashMap[
-      String, (String, Array[(Int, Array[Float], Double)])]() {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        String, (String, Array[(Int, Array[Float], Double)])]): Boolean =
-      size() > codebookMemoCap
-  }
+    * Memoized per session and quantizer listing ([[graft.Memo.ofDir]]):
+    * every serve call reads it, and a read is a Spark job. A
+    * [[persist]] overwrite or an [[IndexMaintenance]] swap changes the
+    * listing, so a swapped quantizer never serves a stale codebook (the
+    * s19 continuity RebuildSpec pins). The returned array is the CACHED
+    * instance, READ-ONLY by contract: an in-place sort/scale would
+    * poison later serves. */
   def loadCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[(Int, Array[Float], Double)] = {
     val qp = quantizerPath(path)
-    val sig =
-      try {
-        val p = new org.apache.hadoop.fs.Path(qp)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(p).map(s =>
-          s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-          .sorted.mkString("|")
-      } catch { case scala.util.control.NonFatal(_) => null }
-    if (sig == null) collectCodebook(spark.read.parquet(qp))
-    else {
-      val cached = codebookMemo.synchronized { codebookMemo.get(qp) }
-      if (cached != null && cached._1 == sig) cached._2
-      else {
-        val cb = collectCodebook(spark.read.parquet(qp))
-        codebookMemo.synchronized { codebookMemo.put(qp, (sig, cb)) }
-        cb
-      }
-    }
+    graft.Memo.ofDir(spark, "ivf.codebook", qp)(
+      collectCodebook(spark.read.parquet(qp)))
   }
 
   /** [[searchPersisted]] with the codebook loaded from the sidecar —

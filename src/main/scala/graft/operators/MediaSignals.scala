@@ -63,45 +63,14 @@ object MediaSignals {
   private val segCols =
     Seq("model", "seg_id", "n_frames_seg", "fp_lo", "fp_hi")
 
-  /** Same session-scoped parameter memo as [[NearDupIndex]]:
-    * immutable after build, so streaming consumers never pay a
-    * per-batch meta read. */
-  private val metaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Int, Int, Int, Long)]()
-
-  private def writeMeta(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    Seq((SchemaVersion, AHashGrid, SegMinFrames, SilenceCut))
-      .toDF("schema_version", "ahash_grid", "seg_min_frames",
-        "silence_cut")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    metaMemo.put(path, (SchemaVersion, AHashGrid, SegMinFrames,
-      SilenceCut))
-  }
+  private val params = Seq("schema_version" -> SchemaVersion,
+    "ahash_grid" -> AHashGrid, "seg_min_frames" -> SegMinFrames,
+    "silence_cut" -> SilenceCut)
 
   private def requireMeta(spark: SparkSession, path: String,
-      op: String): Unit = {
-    val (v, g, mf, sc) = metaMemo.computeIfAbsent(path, _ => {
-      val r =
-        try spark.read.parquet(s"$path/meta")
-          .select(col("schema_version"), col("ahash_grid"),
-            col("seg_min_frames"), col("silence_cut")).head()
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"media signal store at $path has no meta/ — not built by " +
-              s"MediaSignals.build (cannot $op safely)", e)
-        }
-      (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-    })
-    require(v == SchemaVersion && g == AHashGrid && mf == SegMinFrames &&
-      sc == SilenceCut,
-      s"media signal store parameter mismatch on $op at $path: store " +
-        s"has (version=$v, grid=$g, minFrames=$mf, silence=$sc), this " +
-        s"engine derives (version=$SchemaVersion, grid=$AHashGrid, " +
-        s"minFrames=$SegMinFrames, silence=$SilenceCut) — rebuild the " +
-        "store")
-  }
+      op: String): Unit =
+    Sidecar.check(spark, path, "media signal store", "MediaSignals.build",
+      op, params)
 
   private def writeTable(df: DataFrame, cols: Seq[String], dir: String,
       mode: String): Unit =
@@ -147,7 +116,7 @@ object MediaSignals {
     * has no segs); reads and appends handle the fileless table. */
   def build(spark: SparkSession, path: String, frames: DataFrame,
       segs: DataFrame): Unit = {
-    writeMeta(spark, path)
+    Sidecar.write(spark, path, params)
     writeTable(frames, frameCols, s"$path/frames", "overwrite")
     writeTable(segs, segCols, s"$path/segs", "overwrite")
   }

@@ -64,54 +64,19 @@ object NearDupIndex {
       mode = "append")
 
   /** The index parameters, persisted beside the data at build time and
-    * VERIFIED on every append/match (ADVICE r13: appending with
-    * mismatched (n, numHashes, bands) silently corrupts the index —
-    * mismatched banding breaks bucket collisions, a different shingle
-    * width makes the Jaccard verify compare incomparable gram sets.
-    * The contract was scaladoc-only; now it fails loudly). */
-  private def writeMeta(docs: DataFrame, n: Int, numHashes: Int,
-      bands: Int, path: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    paramMemo.put(path, (n, numHashes, bands))
-  }
-
-  /** Validated (n, numHashes, bands) per index path — parameters are
-    * immutable after build, so re-reading meta/ per invocation made
-    * streaming callers (DocStream) pay a driver-side parquet read +
-    * job every micro-batch (ADVICE r14). Same session-scoped-map
-    * convention as DocQueries.persistedIndex; a rebuild at the same
-    * path refreshes the entry via [[writeMeta]]. */
-  private val paramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int)]()
-
-  private def requireParams(spark: SparkSession, path: String, n: Int,
-      numHashes: Int, bands: Int, op: String): Unit = {
-    val (in, ih, ib) = paramMemo.computeIfAbsent(path, _ => {
-      val r =
-        try spark.read.parquet(s"$path/meta")
-          .select(col("n"), col("num_hashes"), col("bands")).head()
-        catch { case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"near-dup index at $path has no meta/ — not built by " +
-              s"NearDupIndex.persist (cannot $op safely)", e)
-        }
-      (r.getInt(0), r.getInt(1), r.getInt(2))
-    })
-    require(in == n && ih == numHashes && ib == bands,
-      s"near-dup index parameter mismatch on $op at $path: index has " +
-        s"(n=$in, numHashes=$ih, bands=$ib), caller passed " +
-        s"(n=$n, numHashes=$numHashes, bands=$bands)")
-  }
+    * checked on every append/match ([[Sidecar]]): mismatched banding
+    * breaks bucket collisions, and a different shingle width makes the
+    * Jaccard verify compare incomparable gram sets. */
+  private def params(n: Int, numHashes: Int, bands: Int) =
+    Seq("n" -> n, "num_hashes" -> numHashes, "bands" -> bands)
 
   private def writeIndex(docs: DataFrame, idCol: Column, textCol: Column,
       n: Int, numHashes: Int, bands: Int, path: String,
       mode: String): Unit = {
     val spark = docs.sparkSession
     if (mode == "append") {
-      requireParams(spark, path, n, numHashes, bands, "append")
+      Sidecar.check(spark, path, "near-dup index", "NearDupIndex.persist",
+        "append", params(n, numHashes, bands))
       // id disjointness is the other half of the append contract; a
       // duplicated sizes row would fan out every matchNew join result
       // for that doc. One pruned-column scan of sizes per append,
@@ -122,7 +87,7 @@ object NearDupIndex {
       require(overlap == 0L,
         s"near-dup index append at $path: batch ids overlap ids " +
           "already in the index (callers must re-idify)")
-    } else writeMeta(docs, n, numHashes, bands, path)
+    } else Sidecar.write(spark, path, params(n, numHashes, bands))
     val sh = Dedup.shingleRows(docs, idCol, textCol, n).cache()
     try {
       // repartition by the partition column before each partitionBy
@@ -183,7 +148,8 @@ object NearDupIndex {
       bands: Int, threshold: Double,
       hotBucketCap: Int = Int.MaxValue,
       maxBucketSize: Int = 10000): DataFrame = {
-    requireParams(spark, path, n, numHashes, bands, "matchNew")
+    Sidecar.check(spark, path, "near-dup index", "NearDupIndex.persist",
+      "matchNew", params(n, numHashes, bands))
     // No caching here: the shingle/signature frames recompute off the
     // (small) batch rather than leaking an unreleasable cache entry
     // per call — Ivf.searchPersisted's convention; long-running

@@ -48,34 +48,27 @@ object DocQueries {
     s"CAST((CASE WHEN $sumMicro >= 0 THEN 1 ELSE -1 END) * " +
       s"((2 * abs($sumMicro) + $den) // (2 * $den)) AS DOUBLE) / 1000000"
 
-  // One persisted index per (session, key): an index is built and
-  // persisted ONCE per JVM, then every later invocation serves from
-  // the existing files — Bench's warmup + timed runs measure the
+  // One persisted index per (session, key) ([[graft.Memo]]): an index
+  // is built and persisted once, then every later invocation serves
+  // from the existing files — Bench's warmup + timed runs measure the
   // match/serve path (the deployment steady state), not repeated
   // index construction, and temp dirs no longer accumulate one index
-  // copy per run (round-5 ADVICE). One shutdown hook removes the
-  // whole tree.
-  private val idxMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  // copy per run (round-5 ADVICE). Each build writes to a path that
+  // does not exist yet; one shutdown hook removes the whole tree.
   private lazy val idxTmpRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft-idx")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(root.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)))
     root
   }
   private[queries] def persistedIndex(s: SparkSession, key: String)(
       build: String => Unit): String =
-    idxMemo.computeIfAbsent((s, key), { _ =>
-      val dir = idxTmpRoot.resolve(
-        key.replaceAll("[^A-Za-z0-9_.-]", "_") + "-" + idxMemo.size).toString
+    graft.Memo(s, s"index|$key") {
+      val dir = java.nio.file.Files.createTempDirectory(idxTmpRoot,
+        key.replaceAll("[^A-Za-z0-9_.-]", "_") + "-").resolve("i").toString
       build(dir)
       dir
-    })
+    }
 
   /** The canonical near-dup pipeline (d2 LSH candidates → d3v exact
     * verify, one cached shingle scan feeding both stages) — the
@@ -83,7 +76,7 @@ object DocQueries {
     * p8), so n/bands/threshold can never drift between a proven
     * stage and the composites built on it. */
   private def verifiedPairs(d: DataFrame): DataFrame = {
-    // shared via Dedup.share (mode-gated cache/checkpoint/none — see
+    // shared via Dedup.share (mode-gated cache/checkpoint — see
     // its scaladoc for the measured trade): the shingle scan feeds
     // both the candidate and the verify stage exactly once
     val sh = Dedup.share(

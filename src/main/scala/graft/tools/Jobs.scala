@@ -76,6 +76,7 @@ object Jobs {
         }
         spark.catalog.clearCache()
       }
+    println(s"[jobs] ${graft.Memo.report}")
     spark.stop()
   }
 }

@@ -179,19 +179,18 @@ class IvfPersistSpec extends SparkSpec {
     val a = Ivf.loadCodebook(spark, dir)
     val b = Ivf.loadCodebook(spark, dir)
     assert(a eq b, "unchanged sidecar must serve the memoized instance")
-    // the memo is bounded: flooding it with ephemeral keys (the
-    // staged-index-path lifecycle of a resident service) evicts in
-    // insertion order and never grows past the cap (ADVICE r15 —
+    // the memo is bounded: flooding the session with ephemeral keys
+    // (the staged-index-path lifecycle of a resident service) evicts
+    // the eldest entry and never grows past the cap (ADVICE r15 —
     // unbounded growth leaked k×dim floats per dead path)
-    Ivf.codebookMemo.synchronized {
-      (0 until Ivf.codebookMemoCap + 16).foreach { i =>
-        Ivf.codebookMemo.put(s"/ephemeral/staged-$i", ("sig", Array.empty))
-      }
-      assert(Ivf.codebookMemo.size <= Ivf.codebookMemoCap,
-        s"memo grew past the cap: ${Ivf.codebookMemo.size}")
-    }
+    val ns = spark.newSession()
+    val held = Ivf.loadCodebook(ns, dir)
+    (0 until graft.Memo.Cap).foreach(i =>
+      graft.Memo(ns, s"/ephemeral/staged-$i")(Array.empty[Int]))
     // a fresh load after eviction still works (re-reads the sidecar)
-    val c = Ivf.loadCodebook(spark, dir)
+    val c = Ivf.loadCodebook(ns, dir)
+    assert(!(c eq held),
+      "the eldest entry survived a full cap of newer entries")
     assert(c.map(_._1).toSeq === a.map(_._1).toSeq)
   }
 }

@@ -86,6 +86,16 @@ class PinReclaimSpec extends SparkSpec {
       maxRddPins = 3)
   }
 
+  test("the ADS-B fixture replays leave no SQL-cache entry in a new session") {
+    spark.catalog.clearCache()
+    val s = spark.newSession()
+    Seq("adsb_flight_details", "adsb_event_details_golden",
+      "adsb_flight_paths", "adsb_landings_histogram_golden").foreach(q =>
+      AdsbQueries.defs(q)(s, "unused").queryExecution.toRdd.count())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an ADS-B query left a SQL-cache entry a resident service never reclaims")
+  }
+
   test("d10c capped index match releases its pins") {
     run("d10c_index_match_capped", DocQueries.defs,
       "/root/testdata/sf0.001", maxRddPins = 3)
