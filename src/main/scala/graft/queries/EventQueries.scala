@@ -338,13 +338,13 @@ object EventQueries {
       // materialize the stage boundary: the session window subtree
       // feeds FOUR aggregations (starts/v/c/p) — exchange reuse
       // usually covers this, but pinning it is the p8 convention.
-      // Lazy localCheckpoint so the blocks self-reclaim (no cache
-      // entry outliving the query).
+      // Eager localCheckpoint: its job reports to live SQL-metric
+      // accumulators, and its blocks self-reclaim (no cache entry).
       val sess = Sessionize.withSessionId(ev(s, dir), col("user_id"),
           col("ts"), 1800L, col("event_id"))
         .select(col("user_id"), col("session_seq"), col("ts"),
           col("event_type"))
-        .localCheckpoint(false)
+        .localCheckpoint(true)
       val keys = Seq("user_id", "session_seq")
       val starts = sess.groupBy(keys.head, keys.tail: _*)
         .agg(min(col("ts")).as("s_ts"))

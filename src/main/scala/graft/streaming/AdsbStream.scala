@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -189,17 +190,22 @@ object AdsbStream {
   /** Wire the full ingest: lines → parse → sessionize → multi-sink.
     *
     * foreachBatch splits the tagged union into the four tables and
-    * appends parquet; `positions_live` is the same positions batch
-    * written into a date-partitioned copy whose old partitions a
-    * retention sweep drops (S7's RULE pair re-expressed). Trigger
-    * matches the reference's 1 s commit cadence (T11).
+    * writes parquet; positions are committed once, partitioned by
+    * (`day` = `to_date(time)`, `batch_id`), and S7's `positions_live`
+    * is the slice [[positionsLive]] reads from them. Trigger matches
+    * the reference's 1 s commit cadence (T11).
     *
     * Per trigger the `positions` write runs first: it materializes the
     * cached micro-batch and observes one row count per kind on the
     * same job. Every other table is written only when its kind has
     * rows ([[writeKinds]]), so a micro-batch of positions alone costs
-    * two jobs, not five. A table's directory therefore appears with
+    * one job, not four. A table's directory therefore appears with
     * its first row.
+    *
+    * An `outDir` whose `positions` is partitioned by `batch_id` alone
+    * (the older layout) is not migrated: start a fresh one, and a
+    * fresh checkpoint, when upgrading. Restart a query in the session
+    * time zone it ran in: a replayed epoch names its `day` in it.
     *
     * `dedupReplays`: a reconnecting socket re-delivers the tail of the
     * previous capture (the reference re-processes it, duplicating
@@ -234,10 +240,8 @@ object AdsbStream {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Out], batchId: Long) =>
         writeKinds(batch, batchId)(
-          Seq("position") -> w("batch_id")("positions"),
-          // day stays the FIRST partition level: retention
-          // (prunePositionsLive) drops day directories wholesale
-          Seq("position") -> (p => w("day", "batch_id")("positions_live")(
+          // day first: positionsLive prunes whole day directories
+          Seq("position") -> (p => w("day", "batch_id")("positions")(
             p.withColumn("day", to_date(col("time"))))),
           Seq("flight") -> w("batch_id")("flights"),
           Seq("landing") -> w("batch_id")("landings"),
@@ -322,42 +326,41 @@ object AdsbStream {
     * equivalent is restarting the failed streaming query from its
     * checkpoint (exactly-once sinks make the restart transparent).
     * Runs `start` and, on query failure, restarts it up to
-    * `attempts − 1` more times with `backoffMs` pause; rethrows once
-    * the budget is exhausted. Returns when the query terminates
-    * cleanly. */
+    * `attempts − 1` more times with `backoffMs` pause, logging a WARN
+    * line with each failure's root cause; rethrows once the budget is
+    * exhausted. Returns those causes once the query ends cleanly. */
   def supervise(attempts: Int = 5, backoffMs: Long = 1000)(
-      start: () => StreamingQuery): Unit = {
-    var remaining = attempts
+      start: () => StreamingQuery): Seq[Throwable] = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    val causes = scala.collection.mutable.ArrayBuffer.empty[Throwable]
     var done = false
     while (!done) {
       val q = start()
       try { q.awaitTermination(); done = true }
       catch {
         case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-          if (remaining <= 1) throw e
-          remaining -= 1
+          if (causes.size + 1 >= attempts) throw e
+          val root = ExceptionUtils.getRootCause(e)
+          causes += root
+          log.warn(s"stream restart ${causes.size} of ${attempts - 1}: " +
+            s"${root.getClass.getName}: ${root.getMessage}")
           Thread.sleep(backoffMs)
       }
     }
+    causes.toSeq
   }
 
-  /** S7 retention: drop `positions_live` day-partitions older than
-    * `retentionDays` (partition drop ≫ row deletes at scale). */
-  def prunePositionsLive(spark: SparkSession, outDir: String,
-      retentionDays: Int = 1): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(s"$outDir/positions_live")
-    if (fs.exists(root)) {
-      val cutoff = java.time.LocalDate.now(java.time.ZoneOffset.UTC)
-        .minusDays(retentionDays.toLong)
-      fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("day=")) {
-          val d = java.time.LocalDate.parse(name.stripPrefix("day="))
-          if (d.isBefore(cutoff)) fs.delete(st.getPath, true)
-        }
-      }
-    }
+  /** S7's `positions_live`: [[start]]'s `positions` rows with `time >=
+    * now − retention`, the reference's delete of rows older than
+    * `now() − 1 day` (`create_public_schema.sql:819-854`) exact to the
+    * row. Pruning starts at the cutoff's date at UTC−18: no writer's
+    * zone dates a kept row earlier, so a reader in any zone loses none. */
+  def positionsLive(spark: SparkSession, outDir: String,
+      retention: java.time.Duration = java.time.Duration.ofDays(1),
+      now: java.time.Instant = java.time.Instant.now()): DataFrame = {
+    val cutoff = now.minus(retention)
+    spark.read.parquet(s"$outDir/positions").where(
+      col("day") >= lit(cutoff.atOffset(java.time.ZoneOffset.MIN)
+        .toLocalDate) && col("time") >= lit(cutoff))
   }
 }

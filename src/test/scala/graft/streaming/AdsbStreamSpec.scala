@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit, min}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
@@ -37,19 +38,59 @@ class AdsbStreamSpec extends SparkSpec {
     // a replayed epoch OVERWRITES its own partition (at-least-once
     // foreachBatch can never duplicate rows)
     assert(pos.columns.contains("batch_id"))
-    assert(new java.io.File(s"$outDir/positions").listFiles()
-      .exists(_.getName.startsWith("batch_id=")))
-    // S7 dual sink: the live copy holds the same rows, day-partitioned
-    val live = spark.read.parquet(s"$outDir/positions_live")
-    assert(live.count() === pos.count())
-    val days = new java.io.File(s"$outDir/positions_live").listFiles()
-      .map(_.getName).filter(_.startsWith("day="))
-    assert(days.toSeq === Seq("day=2019-10-20"))
-    // S7 retention: 2019 partitions are older than any cutoff → dropped
-    AdsbStream.prunePositionsLive(spark, outDir, retentionDays = 1)
-    val after = new java.io.File(s"$outDir/positions_live").listFiles()
-      .map(_.getName).filter(_.startsWith("day="))
-    assert(after.isEmpty)
+    // positions is written once, day first: positions/day=*/batch_id=*
+    val days = new java.io.File(s"$outDir/positions").listFiles()
+      .filter(_.getName.startsWith("day="))
+    assert(days.map(_.getName).toSeq === Seq("day=2019-10-20"))
+    assert(days.head.listFiles().exists(_.getName.startsWith("batch_id=")))
+    assert(!new java.io.File(s"$outDir/positions_live").exists())
+    // S7 live table: positions read back as their rolling 24 h slice
+    def live(now: String) = AdsbStream.positionsLive(spark, outDir,
+      now = java.time.Instant.parse(now)).count()
+    assert(live("2019-10-20T12:00:00Z") === pos.count())
+    assert(live("2019-10-22T12:00:00Z") === 0)
+    // the cutoff is inclusive, exact to the row: a row at exactly
+    // now − 24 h stays, and goes one microsecond later
+    val first = pos.agg(min("time")).as[java.sql.Timestamp].head().toInstant
+    val atFirst = pos.where(col("time") === lit(first)).count()
+    assert(atFirst > 0)
+    val day = java.time.Duration.ofDays(1)
+    assert(AdsbStream.positionsLive(spark, outDir,
+      now = first.plus(day)).count() === pos.count())
+    assert(AdsbStream.positionsLive(spark, outDir,
+      now = first.plus(day).plusNanos(1000)).count() ===
+      pos.count() - atFirst)
+  }
+
+  test("positionsLive loses no row written near midnight in another zone") {
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("graft-sink-tz").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-tz").toString
+    val tz = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(tz)
+    // written in the westernmost zone, from 23:59:50 to 00:00:09:
+    // its midnight splits the rows over two days, both earlier than
+    // the day the reader's zone gives them
+    val pos = try {
+      spark.conf.set(tz, "Etc/GMT+12")
+      val lines = MemoryStream[String]
+      val q = AdsbStream.start(lines.toDF(), outDir, ckpt)
+      lines.addData((0 until 20).map(i => sbsPosition("AAAAAA", 46790 + i)))
+      q.processAllAvailable()
+      q.stop()
+      spark.read.parquet(s"$outDir/positions").collect()
+    } finally spark.conf.set(tz, prev)
+    assert(pos.length === 20)
+    assert(pos.map(_.getAs[java.sql.Date]("day").toLocalDate.toString)
+      .toSet === Set("2019-10-20", "2019-10-21"))
+    // read at the easternmost zone, with the first row exactly at the
+    // cutoff: every row is inside the window
+    val first = pos.map(_.getAs[java.sql.Timestamp]("time").toInstant).min
+    try {
+      spark.conf.set(tz, "Pacific/Kiritimati")
+      assert(AdsbStream.positionsLive(spark, outDir,
+        now = first.plus(java.time.Duration.ofDays(1))).count() === 20)
+    } finally spark.conf.set(tz, prev)
   }
 
   test("startJdbc commits each micro-batch to the store (S6+T11)") {
@@ -102,11 +143,16 @@ class AdsbStreamSpec extends SparkSpec {
     s"MSG,3,1,1,$hex,1,$d,$d,,5000,,,47.1,-1.6,,,0,,0,0"
   }
 
-  private def partitions(outDir: String, table: String): Set[String] =
-    Option(new java.io.File(s"$outDir/$table").listFiles).toSeq.flatten
+  /** The `batch_id=` partitions of `table`, under its `day=` level
+    * where it has one (positions). */
+  private def partitions(outDir: String, table: String): Set[String] = {
+    def dirs(f: java.io.File) = Option(f.listFiles).toSeq.flatten
+    dirs(new java.io.File(s"$outDir/$table"))
+      .flatMap(d => if (d.getName.startsWith("day=")) dirs(d) else Seq(d))
       .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+  }
 
-  test("start(): a positions-only micro-batch runs 2 jobs, no event tables") {
+  test("start(): a positions-only micro-batch runs 1 job, no event tables") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val lines = MemoryStream[String]
@@ -132,9 +178,9 @@ class AdsbStreamSpec extends SparkSpec {
       q
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(spark.read.parquet(s"$outDir/positions").count() === 20)
-    assert(spark.read.parquet(s"$outDir/positions_live").count() === 20)
+    assert(!new java.io.File(s"$outDir/positions_live").exists())
     val batch0 = jobs.count(_ == (q.id.toString -> "0"))
-    assert(batch0 >= 1 && batch0 <= 2, s"jobs of micro-batch 0: $batch0")
+    assert(batch0 === 1, s"jobs of micro-batch 0: $batch0")
     assert(partitions(outDir, "positions") === Set("batch_id=0"))
     assert(Seq("flights", "landings", "takeoffs")
       .forall(partitions(outDir, _).isEmpty))
@@ -204,8 +250,7 @@ class AdsbStreamSpec extends SparkSpec {
       .select("value").as[String].collect()
     val (chunk1, chunk2) = raw.partition(l =>
       l.contains("AAA111") || l.contains("BBB222"))
-    val tables = Seq("positions", "positions_live", "flights", "landings",
-      "takeoffs")
+    val tables = Seq("positions", "flights", "landings", "takeoffs")
     def snapshot() = tables.map { t =>
       // a table with no partition directory has no rows to read
       t -> (if (!Option(new java.io.File(s"$outDir/$t").listFiles)
@@ -230,7 +275,7 @@ class AdsbStreamSpec extends SparkSpec {
       }
       q1.stop()
       val before = snapshot()
-      assert(Seq("positions", "positions_live", "landings", "takeoffs")
+      assert(Seq("positions", "landings", "takeoffs")
         .forall(before(_).nonEmpty))
       val commits = new java.io.File(ckpt, "commits")
       val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
@@ -262,7 +307,7 @@ class AdsbStreamSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-supervise").toString
     val failures = new java.util.concurrent.atomic.AtomicInteger(2)
     val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-    AdsbStream.supervise(attempts = 5, backoffMs = 10) { () =>
+    val causes = AdsbStream.supervise(attempts = 5, backoffMs = 10) { () =>
       stream.toDS().writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -276,6 +321,10 @@ class AdsbStreamSpec extends SparkSpec {
     }
     assert(failures.get() <= 0)     // both injected failures consumed
     assert(seen.get() === 55)       // the batch landed exactly once
+    // each restart's root cause, in order
+    assert(causes.size === 2)
+    assert(causes.forall(_.getMessage.contains("injected sink failure")),
+      causes)
   }
 
   test("event-time timeout closes a silent session (T2, streaming)") {
