@@ -187,9 +187,8 @@ object Meta {
     // VISIBLE-REJECT pair — a structurally-consistent WAV wrapping
     // MPEG Layer 3 (fmt tag 0x0055) and a well-formed AVI whose vids
     // strh declares fccHandler 'H264'. Neither is decodable here
-    // (fail-closed stands), but mm18's codec_reason and the
-    // streaming intake counters must NAME them instead of letting
-    // them vanish from the families silently
+    // (fail-closed stands), but mm18's codec_reason must NAME them
+    // instead of letting them vanish from the families silently
     "talk_mp3.wav", "vid_h264.avi")
 
   /** Extract the bundled synthetic audio/video blobs (mm7/mm8): .pcm

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   *
   *  - [[ImageIo.imageDims]]: header-ONLY dimension probe (the reader
   *    parses the header; pixel data is never decoded) — the cheap
-  *    metadata gate [[graft.operators.Multimodal.withMetadata]] and
-  *    `MediaStream` use for non-BMP containers.
+  *    metadata gate [[graft.operators.Multimodal.withMetadata]] uses
+  *    for non-BMP containers.
   *  - [[ImageIo.aHash]]: full pixel decode → the SAME 8×8 integer
   *    average-hash as [[BmpAHash]] (identical grid mapping, R+G+B
   *    grayscale, integer mean threshold, [hi, lo] bit packing) — so
@@ -40,7 +40,7 @@ import org.apache.spark.sql.types._
   * NULL, never a stage-killing throw; [[ImageIo.MaxPixels]] bounds
   * the full decode's allocation so an adversarial header claiming a
   * gigapixel image (decompression bomb) can't OOM an executor —
-  * exactly the crawler-poison threat the streaming gates exist for.
+  * exactly the crawler-poison threat the admission gates exist for.
   */
 object ImageIo {
 

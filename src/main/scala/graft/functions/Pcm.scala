@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * bits, channels)` maps a declared-format audio payload onto the
   * CANONICAL unsigned-8-bit MONO sample stream every audio analysis
   * in this engine runs on (the mm7 fingerprint, the mm11/mm13 energy
-  * lattice, the streaming silence gate).
+  * lattice).
   *
   * Round-13 (VERDICT r12 ask #1, then widened): until now the audio
   * family admitted only PCM format 1 at 8-bit mono — fail-closed and
@@ -56,7 +56,7 @@ import org.apache.spark.sql.types._
   * Contract: (fmt, bits) ∈ {(1, 8), (1, 16), (3, 32), (6, 8), (7, 8)}
   * and
   * channels ∈ {1, 2} — the admission gates ([[Riff.sampleFormatOk]]
-  * at the batch wav leg, the AVI auds gate and the streaming intake)
+  * at the batch wav leg and the AVI auds gate)
   * enforce this BEFORE the kernel runs; callers normalize
   * WAVE_FORMAT_EXTENSIBLE-wrapping-PCM to fmt 1 via
   * [[Pcm.canonFormat]] (the GUID check lives in the gate). Any other

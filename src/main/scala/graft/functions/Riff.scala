@@ -31,12 +31,11 @@ import org.apache.spark.sql.types._
   * payload audit column), which exclude or flag it visibly — never
   * a silent mis-parse.
   *
-  * One home for the magics, shared by batch ([[graft.queries
-  * .AdsbQueries]]'s wavParsed / videoFrameSums) and streaming
-  * ([[graft.streaming.AudioStream]]) — the two copies of the header
-  * offsets that could drift are gone. The DuckDB oracles replay the
-  * same walk as a bounded recursive CTE over the dumped blob hex, so
-  * any divergence in this kernel turns the gate red.
+  * One home for the magics ([[graft.queries.AdsbQueries]]'s
+  * wavParsed / videoFrameSums and the mm18 audit). The DuckDB
+  * oracles replay the same walk as a bounded recursive CTE over the
+  * dumped blob hex, so any divergence in this kernel turns the gate
+  * red.
   */
 case class RiffFindExpr(content: Expression, start: Expression,
     end: Expression, fourcc: String, forms: Boolean)
@@ -442,8 +441,8 @@ object Riff {
         fmtOff + 40 <= length(content) &&
         bytesHexAt(content, fmtOff + 24, 16) === lit(SubformatPcmHex))
 
-  /** The ONE sample-format admission shared by the batch wav leg,
-    * the AVI auds gate and the streaming intake (round-13): integer
+  /** The ONE sample-format admission shared by the batch wav leg
+    * and the AVI auds gate (round-13): integer
     * PCM ([[fmtIsPcm]] — format 1, or EXTENSIBLE wrapping the PCM
     * GUID) at 8/16 bits, G.711 A-law (6) / µ-law (7) at their fixed
     * 8 bits, or IEEE float PCM (3) at 32 bits (round-14, VERDICT r13
@@ -464,9 +463,8 @@ object Riff {
     * #4): the fail-closed gates rejected compressed audio SILENTLY —
     * at crawl scale most audio is compressed, and those blobs
     * vanished from the families with no per-blob reason. ONE
-    * classification home for the batch audit (mm18) and the
-    * streaming intake counters, over the [[withWavColumns]] header
-    * fields:
+    * classification home for the batch audit (mm18), over the
+    * [[withWavColumns]] header fields:
     *  - `ok`: [[sampleFormatOk]] admits (integer PCM 8/16, G.711,
     *    float32 — mono/stereo);
     *  - `mp3_layer3`: format tag 0x0055 (MPEG Layer 3 in WAV);
@@ -660,8 +658,8 @@ object Riff {
       Bridge.expression(start.cast("int")),
       Bridge.expression(end.cast("int"))))
 
-  /** The shared WAV admission + header decode (one home for batch
-    * AND streaming — round-11 verdict ask #3): input must carry a
+  /** The shared WAV admission + header decode (one home —
+    * round-11 verdict ask #3): input must carry a
     * binary `content` column; emits `wav_ok` plus the decoded header
     * fields and the 0-based `data_off`/`data_bytes` locating the PCM
     * payload. Fields are NULL-free only where `wav_ok`; callers
@@ -715,8 +713,8 @@ object Riff {
           col("__fmt") >= 0 && col("__dat") >= 0 &&
           col("fmt_bytes") >= 16)
       // the walk reports what the header DECLARES; truncation is the
-      // caller-visible fits check — analysis admission (wavParsed,
-      // AudioStream) requires it, the mm18 audit exposes it as a
+      // caller-visible fits check — analysis admission (wavParsed)
+      // requires it, the mm18 audit exposes it as a
       // failing payload column instead of hiding the row. BOTH chunk
       // bodies must fit: a truncated fmt body would otherwise decode
       // NULL header fields past the blob end (round-11 review)
@@ -758,9 +756,8 @@ object Riff {
     * gate enforces), and `avi_audio` (the ordered payload
     * concatenation — the container-level PCM stream in its DECLARED
     * format; consumers canonicalize via [[Pcm.pcmCanonical]], NULL
-    * unless ok). ONE home for the audio demux, shared by the batch
-    * corpus ([[graft.queries.AdsbQueries]]) and the streaming gate
-    * ([[graft.streaming.AudioStream]]). */
+    * unless ok). ONE home for the audio demux
+    * ([[graft.queries.AdsbQueries]]). */
   def withAviAudio(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val c = col("content")

@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: [[referenceStats]] is one map-side-combinable pass;
   * the |groups|-row stats table broadcasts into [[flag]] — no window,
-  * no self-join, and the same broadcast works unchanged on an
-  * unbounded stream (see `EventStream.startQuarantine`).
+  * no self-join.
   */
 object Anomaly {
 

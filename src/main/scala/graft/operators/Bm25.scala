@@ -55,8 +55,8 @@ import graft.functions.TextFunctions
   * (df, N, avgdl change with every batch), so [[appendPersisted]]
   * rebuilds the sidecar from the grown postings — one aggregation
   * scan, still no retraining equivalent; the idf/stats formulas live
-  * in ONE place ([[statsIdfOf]]) shared by build, append and the
-  * streaming refresh, so the paths cannot drift.
+  * in ONE place ([[statsIdfOf]]) shared by build and append, so the
+  * paths cannot drift.
   *
   * Reference scope: the reference engine has no lexical retrieval;
   * this is part of the beyond-reference training-data layer (SURVEY
@@ -92,8 +92,8 @@ object Bm25 {
       explode(termsOf(col("qtext"))).as("term")).distinct()
 
   /** (stats, idf) from a postings frame — the SINGLE source of the
-    * corpus-statistics formulas, shared by [[build]], the append
-    * refresh and the streaming refresh. */
+    * corpus-statistics formulas, shared by [[build]] and the
+    * append refresh. */
   private def statsIdfOf(postings: DataFrame): (DataFrame, DataFrame) = {
     val docLens = postings.select(col("doc_id"), col("dl")).distinct()
     val stats = docLens.agg(
@@ -170,16 +170,15 @@ object Bm25 {
   }
 
   /** The at-rest postings read shared by every load path: optional
-    * static stride pruning, tombstone filter, layout columns
-    * (`stride`, and `epoch` for the LexStream ingest layout)
-    * dropped. */
+    * static stride pruning, tombstone filter, layout column
+    * `stride` dropped. */
   private def atRestPostings(spark: SparkSession, path: String,
       strides: Option[Seq[Long]]): DataFrame = {
     val raw = spark.read.parquet(path)
     val pruned = strides.fold(raw)(ss =>
       raw.where(col("stride").isInCollection(ss)))
     IndexMaintenance.filterTombstones(spark, path, pruned)
-      .drop("stride", "epoch")
+      .drop("stride")
       .withColumnRenamed("id", "doc_id")
   }
 
@@ -222,11 +221,7 @@ object Bm25 {
     * excluded from the refreshed statistics. Same contract as the
     * ANN appends otherwise: disjoint ids, caller-provided
     * exactly-once batching, periodic
-    * [[IndexMaintenance.compactPersisted]] (flat layout). Batch-layout
-    * (`stride=` at the top level) indexes only — an epoch-layout index
-    * built by the LexStream ingest grows through its own epoch
-    * directories (mixing the two depths in one tree would break
-    * partition discovery). */
+    * [[IndexMaintenance.compactPersisted]] (flat layout). */
   def appendPersisted(spark: SparkSession, path: String,
       docs: DataFrame, idCol: Column, textCol: Column): Unit = {
     val (_, k1, b) = loadSidecar(spark, path)
@@ -235,36 +230,11 @@ object Bm25 {
       .withColumn("stride", strideOf(col("term")))
       .repartition(col("stride"))
       .write.mode("append").partitionBy("stride").parquet(path)
-    refreshMeta(spark, path, k1, b)
-  }
-
-  /** Rebuild the idf/stats sidecar from the at-rest postings
-    * (tombstone-filtered) — the shared refresh step of
-    * [[appendPersisted]] and the LexStream per-epoch ingest. Safe to
-    * call before any sidecar exists (the first streamed epoch). */
-  private[graft] def refreshMeta(spark: SparkSession, path: String,
-      k1: Double, b: Double): Unit = {
+    // rebuild idf/stats from the grown, tombstone-filtered postings
     val postings = atRestPostings(spark, path, None)
     val (stats, idf) = statsIdfOf(postings)
     writeMeta(spark, path, Index(postings, idf, stats, k1, b))
   }
-
-  /** One micro-batch of the LexStream ingest: the batch's postings
-    * OVERWRITE `path/epoch=N` (stride-sharded inside — partition
-    * discovery exposes both levels, and [[searchAt]]'s stride pruning
-    * applies per epoch), so a replayed epoch rewrites its own
-    * directory instead of double-counting term frequencies — the
-    * AnnStream epoch protocol applied to index INGEST. The caller is
-    * responsible for the [[refreshMeta]] that follows. */
-  private[graft] def writeEpoch(spark: SparkSession, path: String,
-      docs: DataFrame, idCol: Column, textCol: Column, epoch: Long,
-      k1: Double, b: Double): Unit =
-    build(docs, idCol, textCol, k1, b).postings
-      .withColumnRenamed("doc_id", "id")
-      .withColumn("stride", strideOf(col("term")))
-      .repartition(col("stride"))
-      .write.mode("overwrite").partitionBy("stride")
-      .parquet(s"${path.stripSuffix("/")}/epoch=$epoch")
 
   // ---- metadata sidecar: staged swap + self-recovering reads ------
 

@@ -35,19 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
-  /** The shared prologue of both KL forms: per-(slice, tok) counts,
-    * one shuffle. NOT materialized here — [[unigramKl]]/[[klAgainst]]
-    * wrap it in `Dedup.share` (harness clears the cache per query),
-    * while the streaming monitor persists it with an explicit
-    * per-batch unpersist (a resident service must not grow the cache
-    * catalog — `DocStream.startDriftMonitor`). */
-  private[graft] def sliceCounts(docs: DataFrame, sliceCol: Column,
-      textCol: Column): DataFrame =
-    docs.select(sliceCol.as("slice"),
-        explode(split(textCol, " ")).as("tok"))
-      .groupBy(col("slice"), col("tok"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** One row per slice: (slice, n_tokens, kl_nats) where kl_nats is
     * the fixed-point KL sum divided back into nats, rounded to 6
     * places. Slices with a distribution identical to the corpus score
@@ -57,7 +44,10 @@ object Drift {
     // (scoring join, slice totals, corpus counts, corpus total) would
     // otherwise each replay the scan + token explode + first shuffle —
     // AQE's exchange reuse only catches the bit-identical subtrees
-    val st = Dedup.share(sliceCounts(docs, sliceCol, textCol))
+    val st = Dedup.share(docs.select(sliceCol.as("slice"),
+        explode(split(textCol, " ")).as("tok"))
+      .groupBy(col("slice"), col("tok"))
+      .agg(count(lit(1)).as("cnt")))
     val sTot = st.groupBy(col("slice")).agg(sum(col("cnt")).as("tot"))
     val gTok = st.groupBy(col("tok")).agg(sum(col("cnt")).as("gcnt"))
     val gTot = sTot.agg(sum(col("tot")).as("gtot"))
@@ -68,49 +58,6 @@ object Drift {
         (col("cnt") * floor(log(
           (col("cnt").cast("double") * col("gtot").cast("double")) /
             (col("gcnt").cast("double") * col("tot").cast("double"))) *
-          1000000.0d).cast("long")).as("term_fp"))
-      .groupBy(col("slice"), col("tot"))
-      .agg(sum(col("term_fp")).as("_s"))
-      .select(col("slice"), col("tot").as("n_tokens"),
-        round(col("_s").cast("double") / 1000000.0d / col("tot"), 6)
-          .as("kl_nats"))
-  }
-
-  /** KL(P_slice ‖ Q_reference) against an EXTERNAL reference
-    * distribution `reference` = (tok, ref_cnt) — the form a streaming
-    * monitor runs per ingest batch against the at-rest corpus
-    * profile ([[unigramKl]] is the in-corpus special case, where
-    * corpus ⊇ slice makes smoothing unnecessary). An external
-    * reference can MISS slice tokens, so Q is add-one smoothed over
-    * the UNION vocabulary: q = (ref_cnt+1)/(ref_tot+V). Same
-    * fixed-point discipline; V and ref_tot ride 1-row broadcasts;
-    * the reference joins on tok (never collected — it can be
-    * vocabulary-sized). */
-  def klAgainst(docs: DataFrame, sliceCol: Column, textCol: Column,
-      reference: DataFrame): DataFrame =
-    klAgainstCounts(Dedup.share(sliceCounts(docs, sliceCol, textCol)),
-      reference)
-
-  /** [[klAgainst]] over PRE-MATERIALIZED (slice, tok, cnt) counts —
-    * the caller owns the materialization lifecycle (the streaming
-    * monitor persists per batch and unpersists after the epoch
-    * write; batch callers should prefer [[klAgainst]]). */
-  def klAgainstCounts(st: DataFrame, reference: DataFrame): DataFrame = {
-    val sTot = st.groupBy(col("slice")).agg(sum(col("cnt")).as("tot"))
-    val ref = reference.select(col("tok"), col("ref_cnt"))
-    val refTot = ref.agg(sum(col("ref_cnt")).as("rtot"))
-    val vocab = st.select(col("tok")).unionByName(ref.select(col("tok")))
-      .distinct().agg(count(lit(1)).as("v"))
-    st.join(ref, Seq("tok"), "left")
-      .join(broadcast(sTot), Seq("slice"))
-      .crossJoin(broadcast(refTot))
-      .crossJoin(broadcast(vocab))
-      .select(col("slice"), col("tot"),
-        (col("cnt") * floor(log(
-          (col("cnt").cast("double") *
-            (col("rtot") + col("v")).cast("double")) /
-            ((coalesce(col("ref_cnt"), lit(0L)) + 1).cast("double") *
-              col("tot").cast("double"))) *
           1000000.0d).cast("long")).as("term_fp"))
       .groupBy(col("slice"), col("tot"))
       .agg(sum(col("term_fp")).as("_s"))

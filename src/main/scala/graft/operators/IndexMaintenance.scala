@@ -27,10 +27,9 @@ import graft.sources.Sinks
   *  - '''Deletes''': FAISS `remove_ids` semantics in two phases.
   *    [[deletePersisted]] appends ids to an `__tombstones` sidecar
   *    (cheap, append-only — no data files touched); every search path
-  *    ([[Ivf.searchPersisted]], [[IvfPq.searchPersisted]],
-  *    [[IvfPq.loadIndex]]'s coded frame, and therefore the
-  *    `AnnStream` serving tier) anti-joins the sidecar so deleted ids
-  *    never return. [[compactPersisted]] then physically purges
+  *    ([[Ivf.searchPersisted]], [[IvfPq.searchPersisted]] and
+  *    [[IvfPq.loadIndex]]'s coded frame) anti-joins the sidecar so
+  *    deleted ids never return. [[compactPersisted]] then physically purges
   *    tombstoned rows during the rewrite and clears the sidecar —
   *    clearing happens strictly AFTER every directory is rewritten,
   *    so a crash mid-compaction leaves the tombstones in place and
@@ -90,7 +89,8 @@ object IndexMaintenance {
     * sidecar. Layouts:
     *  - partitioned (`cid=` / `stride=` at the first level): each
     *    partition directory compacts individually;
-    *  - NESTED (LexStream's `epoch=N/stride=M` tree): compaction
+    *  - NESTED (`a=1/b=2` trees, the layout of the ADS-B stream's
+    *    `day=D/batch_id=N` positions table): compaction
     *    descends to the LEAF partition directories, so the rewrite
     *    never flattens an inner partition column into a data column
     *    (which would leave leaf files at conflicting depths and break

@@ -290,8 +290,7 @@ object Ivf {
     * semantics for the parquet layout. Per-batch cost scales with the
     * batch, never the indexed corpus (the [[NearDupIndex]] property,
     * here for ANN). Contract: batch ids are disjoint from indexed
-    * ids, and the caller provides exactly-once batch semantics
-    * (wrap epochs as `AnnStream` does for idempotent replay).
+    * ids, and the caller provides exactly-once batch semantics.
     * Appended vectors are quantized by the ORIGINAL codebook;
     * rebuild when the embedding distribution drifts. Each batch adds
     * one file per touched cluster directory — run

@@ -262,8 +262,7 @@ object IvfPq {
     * Ivf.probedEligible convention on the compressed tier): probes +
     * the probed clusters' code rows after partition pruning, the
     * caller's pre-filter, and the tombstone anti-join. Tombstone-aware
-    * as Ivf.searchPersisted — this also covers the AnnStream serving
-    * tier, which searches through here per batch. corpusFilter = the
+    * as Ivf.searchPersisted. corpusFilter = the
     * filtered-ANN pre-filter over payload columns written by
     * persistWithPayload: evaluates in the pruned scan, BEFORE any ADC
     * arithmetic. */

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * The raw derivation pipelines (container walk → decode → hash /
   * energy → segment → contour) stay alive as the BUILD path and as
   * their own oracle-gated queries; the store is what the composite
-  * consumers (mm22's container-pair verdicts, a streaming verdict
-  * leg) read.
+  * consumers (mm22's container-pair verdicts) read.
   *
   * Lifecycle discipline (the [[NearDupIndex]] contract, applied to
   * media): pipeline PARAMETERS persist in a `meta` sidecar at build
@@ -147,10 +146,9 @@ object MediaSignals {
   }
 
   /** mm22's containment PAIR LEG over a (model, h1, h2) signature
-    * frame — ONE home (round-15) shared by the batch verdict table
-    * and the streaming matcher, so the hot cap (64) and the ppm cut
-    * can never drift between them: hot signatures drop from both
-    * intersection and sizes, pairs materialize only through shared
+    * frame — ONE home (round-15) for the hot cap (64) and the ppm
+    * cut of the verdict table's two legs: hot signatures drop from
+    * both intersection and sizes, pairs materialize only through shared
     * signatures (inverted-index equi-join, never all-pairs), and
     * containment = 10⁶·|∩| / min(|A|,|B|). */
   def containmentLeg(sigs0: DataFrame, shared: String,
@@ -194,42 +192,6 @@ object MediaSignals {
           .when(col("v_cont_ppm") === 1000000L, "video_only_dup")
           .when(col("a_cont_ppm") === 1000000L, "audio_only_dup")
           .otherwise("related"))
-
-  /** Match a NEW batch of containers' signals against the store —
-    * the d10 `matchNew` shape at the container grain (round-15,
-    * VERDICT r14 stretch #7): verdict rows for every pair involving
-    * at least one batch container, computed over store ∪ batch so
-    * the hot-signature sets (and therefore every number) equal what
-    * the batch mm22 table reports for the same total corpus —
-    * batch-replay ≡ at-rest, spec-pinned. Batch models collect to
-    * the driver for the pair filter: a micro-batch holds a bounded
-    * number of CONTAINERS (not signals), the same size class as the
-    * d10 batch-id set. Batch models must be disjoint from stored
-    * models (the [[append]] contract — match, then append). */
-  def matchVerdicts(spark: SparkSession, path: String,
-      newFrames: DataFrame, newSegs: DataFrame): DataFrame = {
-    requireMeta(spark, path, "match")
-    val vSigs = frames(spark, path)
-      .select(col("model"), col("ahash_hi").as("h1"),
-        col("ahash_lo").as("h2"))
-      .unionByName(newFrames.select(col("model"),
-        col("ahash_hi").as("h1"), col("ahash_lo").as("h2")))
-      .distinct()
-    val aSigs = segs(spark, path)
-      .select(col("model"), col("fp_hi").as("h1"),
-        col("fp_lo").as("h2"))
-      .unionByName(newSegs.select(col("model"),
-        col("fp_hi").as("h1"), col("fp_lo").as("h2")))
-      .distinct()
-    val nm = newFrames.select(col("model"))
-      .unionByName(newSegs.select(col("model"))).distinct()
-      .collect().map(_.getString(0))
-    verdictMerge(
-      containmentLeg(vSigs, "v_shared", "v_cont_ppm"),
-      containmentLeg(aSigs, "a_shared", "a_cont_ppm"))
-      .where(col("model_a").isin(nm: _*) || col("model_b").isin(nm: _*))
-      .orderBy(col("model_a"), col("model_b"))
-  }
 
   /** The persisted frame-hash lattice (mm19 grain). */
   def frames(spark: SparkSession, path: String): DataFrame = {

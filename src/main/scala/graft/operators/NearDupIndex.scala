@@ -153,10 +153,9 @@ object NearDupIndex {
     // No caching here: the shingle/signature frames recompute off the
     // (small) batch rather than leaking an unreleasable cache entry
     // per call — Ivf.searchPersisted's convention; long-running
-    // callers (DocStream) stay leak-free without session-wide
-    // cache eviction. The one exception is `stats` below, which is
-    // localCheckpointed (self-reclaiming blocks, not a catalog entry)
-    // only when the hot route actually consumes it twice.
+    // callers stay leak-free without session-wide cache eviction.
+    // The one exception is `stats` below, which is localCheckpointed
+    // (self-reclaiming blocks, not a catalog entry) only when the hot route actually consumes it twice.
     val newSh = Dedup.shingleRows(newDocs, idCol, textCol, n)
     val newBanded = Dedup.bandedBuckets(newSh, numHashes, bands)
       .withColumnRenamed("id", "new_id")

@@ -71,8 +71,7 @@ object AdsbQueries {
     * off the end) still excludes itself visibly — never a mis-parse.
     * One row per valid file with every header field decoded
     * (little-endian, exact integers) plus the 0-based payload
-    * locator (`data_off`, `data_bytes`). The same shared gate admits
-    * blobs on the streaming side ([[graft.streaming.AudioStream]]). */
+    * locator (`data_off`, `data_bytes`). */
   private[graft] def wavParsed(s: SparkSession,
       dir: String = Meta.mediaDir()): DataFrame =
     graft.functions.Riff.withWavColumns(Meta.loadMediaFiles(s, dir, "wav"))
@@ -117,10 +116,8 @@ object AdsbQueries {
   private def aviAdmitted(s: SparkSession): DataFrame =
     aviAdmittedOf(Meta.loadMediaFiles(s, Meta.mediaDir(), "avi"))
 
-  /** [[aviAdmitted]] over an arbitrary (model, content) blob frame —
-    * generalized round-15 so the streaming dup-verdict leg derives
-    * the SAME lattice from its micro-batches. */
-  private[graft] def aviAdmittedOf(blobs: DataFrame): DataFrame =
+  /** [[aviAdmitted]] over an arbitrary (model, content) blob frame. */
+  private def aviAdmittedOf(blobs: DataFrame): DataFrame =
     Riff.withAviColumns(blobs)
       .where(col("avi_ok"))
       // codec-routed frames (round-14): MJPG videos carry their
@@ -204,8 +201,8 @@ object AdsbQueries {
     * unsigned-8-mono sample stream via [[graft.functions.Pcm
     * .pcmCanonical]] (8-bit mono is the identity, so every prior
     * blob's bytes — and hash — are unchanged), and the wav leg now
-    * carries the SAME declared-format gate the AVI/streaming legs
-    * enforce (PCM format 1, bits ∈ {8,16}, channels ∈ {1,2}): a
+    * carries the SAME declared-format gate the AVI leg enforces
+    * (PCM format 1, bits ∈ {8,16}, channels ∈ {1,2}): a
     * 24-bit or compressed WAV is REJECTED visibly instead of having
     * its raw bytes mis-read as 8-bit samples. Headerless .pcm blobs
     * are 8-bit mono BY the input contract (no header to declare
@@ -227,8 +224,8 @@ object AdsbQueries {
   /** The demuxed audio stream of every valid AVI with ≥ 1 `01wb`
     * chunk whose payloads all fit (and a COMPLETE movi walk —
     * round-13, ADVICE r12 #1) — the audio twin of the 00db video
-    * demux, via the SAME shared gate the streaming intake uses
-    * ([[graft.functions.Riff.withAviAudio]]), canonicalized onto the
+    * demux, via the shared gate ([[graft.functions.Riff
+    * .withAviAudio]]), canonicalized onto the
     * unsigned-8-mono sample stream. */
   private def aviAudioPcm(s: SparkSession): DataFrame =
     Riff.withAviAudio(Meta.loadMediaFiles(s, Meta.mediaDir(), "avi"))
@@ -258,9 +255,8 @@ object AdsbQueries {
 
   /** The segment-fingerprint derivation over an arbitrary CANONICAL
     * (model, content, length) blob frame (unsigned-8 mono samples —
-    * [[graft.functions.Pcm]]'s canonical stream) — the ingest kernel
-    * the streaming dup-verdict leg shares with the batch build path. */
-  private[graft] def segFingerprintsOfCanonical(
+    * [[graft.functions.Pcm]]'s canonical stream). */
+  private def segFingerprintsOfCanonical(
       canon: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fx = canon
@@ -306,8 +302,8 @@ object AdsbQueries {
     * read it replay against blob-derived oracles, proving
     * append ≡ rebuild bit-for-bit (the d10a discipline, applied to
     * media signals). Production shape: ingest computes each
-    * container's signals once and appends them here; mm22 and the
-    * streaming verdict leg never re-walk containers. */
+    * container's signals once and appends them here; mm22 never
+    * re-walks containers. */
   private[graft] def mediaSignalsPath(s: SparkSession): String =
     DocQueries.persistedIndex(s, "msig|bundled") { p =>
       import graft.operators.MediaSignals
@@ -422,16 +418,14 @@ object AdsbQueries {
   /** The RAW per-frame perceptual-hash lattice (model, frame_idx,
     * ahash_hi, ahash_lo) — extracted round-15 as the BUILD path of
     * the at-rest [[graft.operators.MediaSignals]] store: ingest
-    * derives these once, every composite consumer (mm22, streaming
-    * verdicts) serves from the persisted table. */
+    * derives these once, every composite consumer (mm22) serves
+    * from the persisted table. */
   private def mm19FrameHashes(s: SparkSession): DataFrame =
     frameHashesOf(Meta.loadMediaFiles(s, Meta.mediaDir(), "avi"))
 
   /** The frame-hash derivation over an arbitrary (model, content)
-    * blob frame — the ingest kernel the streaming dup-verdict leg
-    * shares with the batch build path (bit-identical by
-    * construction: same admission, same decode, same grid). */
-  private[graft] def frameHashesOf(blobs: DataFrame): DataFrame = {
+    * blob frame: admission, decode, grid hash. */
+  private def frameHashesOf(blobs: DataFrame): DataFrame = {
     import graft.functions.BmpAHash
     val hashed0 = aviAdmittedOf(blobs)
       .select(col("model"), transform(col("dbs"), pk => {
@@ -1202,8 +1196,8 @@ object AdsbQueries {
     // audit reads — not the survivor set). Gates per modality, all
     // exact-integer and already oracle-proven elsewhere: images
     // reject on the flat-placeholder variance (< 1000 on the 0..765
-    // gray scale — MediaStream's ingest gate, stricter than mm9's
-    // advisory flag); audio rejects on mm11's mostly-silent share
+    // gray scale — stricter than mm9's advisory flag); audio rejects
+    // on mm11's mostly-silent share
     // (≥ 50% frames under energy 4096); video rejects exact/contained
     // duplicates from mm15's containment readout (the SMALLER frame
     // set is the redundant one; ties reject the lexicographically

@@ -167,6 +167,42 @@ class RiffWalkSpec extends SparkSpec {
     assert(mix.isEmpty)
   }
 
+  test("the AVI audio gate: vid_talk and vid_duet admit, the rest fail closed") {
+    // the demuxed 01wb stream canonicalizes onto unsigned-8 mono with
+    // exact byte, frame and silent-frame counts: vid_talk's 4096
+    // planted bytes (24 of 64 frames silent) and vid_duet's 16-bit
+    // stereo 16640 bytes collapsed to 4160 channel-mean samples (its
+    // planted 4-frame silent rim in 65). Rejected: a video-only movi
+    // (vid_pre), a movi past the 4096-chunk walk cap (vid_wall) and
+    // an auds strf declaring 24-bit samples, outside the canonical
+    // contract
+    import spark.implicits._
+    val wide = fixture("vid_talk.avi").clone()
+    assert(wide(310) === 8.toByte, "auds strf layout moved — repin")
+    wide(310) = 24.toByte
+    val blobs = Seq("vid_talk", "vid_pre", "vid_duet", "vid_wall")
+      .map(m => m -> fixture(s"$m.avi")) :+ ("vid_talk_24" -> wide)
+    val audio = Riff.withAviAudio(blobs.toDF("model", "content"))
+    val admitted = audio.where(col("avi_audio_ok"))
+      .select(col("model"), Pcm.pcmCanonical(col("avi_audio"),
+        col("avi_audio_format"), col("avi_audio_bits"),
+        col("avi_audio_channels")).as("pcm"))
+      .select(col("model"), length(col("pcm")).cast("long"),
+        FrameSums.frameEnergies(col("pcm"), lit(0), lit(64)))
+      .collect().map { r =>
+        val e = r.getSeq[Long](2)
+        val silent = e.count(_ < 4096L).toLong
+        r.getString(0) ->
+          ((r.getLong(1), e.length.toLong, 1000000L * silent / e.length))
+      }.toMap
+    assert(admitted === Map(
+      "vid_talk" -> ((4096L, 64L, 375000L)),
+      "vid_duet" -> ((4160L, 65L, 61538L))))
+    val rejected = audio.where(!col("avi_audio_ok"))
+      .select("model").as[String].collect().toSet
+    assert(rejected === Set("vid_pre", "vid_wall", "vid_talk_24"))
+  }
+
   test("the shared gates never throw on garbage blobs, even unguarded") {
     // round-12 regression: a not-found chunk's packed sentinel
     // decodes to offset 2³²−1; selecting the field columns OUTSIDE

@@ -46,25 +46,6 @@ class DriftSpec extends SparkSpec {
     assert(run(d) === run(d.repartition(7)))
   }
 
-  test("klAgainst smooths unseen tokens instead of blowing up") {
-    val ref = Seq(("x", 8L), ("y", 2L)).toDF("tok", "ref_cnt")
-    // slice "b" is fully outside the reference vocabulary: every
-    // term smooths to q = 1/(10+4) and KL stays finite
-    val d = Seq(("a", "x x y"), ("b", "q r")).toDF("src", "text")
-    val out = Drift.klAgainst(d, col("src"), col("text"), ref)
-      .select(col("slice"), col("kl_nats")).as[(String, Double)]
-      .collect().toMap
-    // closed form, V = |{x,y,q,r}| = 4, rtot = 10:
-    // a: 2/3·ln((2/3)/(9/14)) + 1/3·ln((1/3)/(3/14))
-    val expA = 2.0 / 3 * math.log((2.0 / 3) / (9.0 / 14)) +
-      1.0 / 3 * math.log((1.0 / 3) / (3.0 / 14))
-    // b: 2 · 1/2·ln((1/2)/(1/14))
-    val expB = math.log(0.5 / (1.0 / 14))
-    assert(math.abs(out("a") - expA) < 1e-5)
-    assert(math.abs(out("b") - expB) < 1e-5)
-    assert(out("b") > out("a"))
-  }
-
   test("matches a local fixed-point KL reference on random corpora") {
     val rnd = new scala.util.Random(7777)
     val rows = (1 to 120).map { _ =>

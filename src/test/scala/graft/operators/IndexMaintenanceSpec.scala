@@ -133,7 +133,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         topK = 5, nProbe = 3)
       .select(col("vec_id")).distinct().limit(3).as[Long].collect().toSeq
     IndexMaintenance.deletePersisted(spark, dir, victims.toDF("id"))
-    // persisted ADC path (also the AnnStream serving path)
+    // persisted ADC path
     val persisted = IvfPq.searchPersisted(spark, dir, index, queries,
       topK = 5, nProbe = 3)
     assert(persisted.where(col("vec_id").isin(victims.map(Long.box): _*))
@@ -144,31 +144,6 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(mem.where(col("vec_id").isin(victims.map(Long.box): _*))
       .count() === 0L)
     index.coded.unpersist(blocking = false)
-  }
-
-  test("deleted ids never return: streamed serving") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val (dir, codebook) = grownIvf()
-    val victims = Ivf.searchPersisted(spark, dir, codebook,
-        queries, topK = 5, nProbe = 3)
-      .select(col("vec_id")).distinct().limit(2).as[Long].collect().toSeq
-    IndexMaintenance.deletePersisted(spark, dir, victims.toDF("id"))
-    val in = MemoryStream[(Long, Array[Float])]
-    val outDir = Files.createTempDirectory("maint-out").toString
-    val ckpt = Files.createTempDirectory("maint-ckpt").toString
-    val q = graft.streaming.AnnStream.startIvf(
-      in.toDF().toDF("qid", "qvec"), dir, codebook, outDir, ckpt,
-      topK = 5, nProbe = 3)
-    in.addData(emb.where(col("vec_id") < 10)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().toSeq)
-    q.processAllAvailable()
-    q.stop()
-    val served = spark.read.parquet(outDir)
-    assert(served.count() > 0)
-    assert(served.where(col("vec_id").isin(victims.map(Long.box): _*))
-      .count() === 0L)
   }
 
   test("compaction physically purges tombstones and clears the sidecar") {

@@ -85,6 +85,24 @@ class PackSpec extends SparkSpec {
     assert(r(3).getString(3) === "reach <EMAIL> via <IP> ok")
   }
 
+  test("quality and language gate: prose passes, junk and a wrong tag fail") {
+    val good =
+      "the quick brown fox jumps over the lazy dog and runs far into " +
+        "the quiet green hills of the old countryside before the sun " +
+        "is down and the long warm evening settles in over the wide " +
+        "river valley with a slow golden light on the water"
+    val d = Seq(
+      (1L, good, "en"),
+      (2L, "x", "en"),
+      (3L, good + " mail me a.b@c.org today ok", "en"),
+      (4L, good, "de"))
+      .toDF("doc_id", "text", "lang")
+    val kept = d.where(TextFunctions.qualityScore(col("text")) >= 0.3 &&
+        TextFunctions.langGuess(col("text")) === col("lang"))
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept === Set(1L, 3L))
+  }
+
   test("repetition report flags degenerate docs, keeps varied ones") {
     val d = Seq(
       (1L, "spam spam spam spam spam spam spam spam"),

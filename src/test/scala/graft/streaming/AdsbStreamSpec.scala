@@ -327,6 +327,31 @@ class AdsbStreamSpec extends SparkSpec {
       causes)
   }
 
+  test("ingest with dedupReplays collapses a full socket re-delivery") {
+    implicit val sqlCtx = spark.sqlContext
+    val lines = MemoryStream[String]
+    val outDir = Files.createTempDirectory("graft-dedup-e2e").toString
+    val ckpt = Files.createTempDirectory("graft-dedup-e2e-ckpt").toString
+    val raw = graft.adsb.Sbs.fixtureLines(spark, "adsb_message_stream.txt")
+      .select("value").as[String].collect().toSeq
+    val q = AdsbStream.start(lines.toDF(), outDir, ckpt,
+      dedupReplays = true)
+    lines.addData(raw)
+    q.processAllAvailable()
+    lines.addData(raw) // reconnect replays the whole capture
+    q.processAllAvailable()
+    q.stop()
+
+    // the capture spans <2 s, far inside the watermark delay, so every
+    // re-delivered row is still in dedup state → output equals the
+    // single-delivery batch replay
+    val batchPositions = graft.adsb.AdsbPipeline
+      .replayFixture(spark, "adsb_message_stream.txt")
+      .toDF().where("kind = 'position'").count()
+    val got = spark.read.parquet(s"$outDir/positions").count()
+    assert(got === batchPositions)
+  }
+
   test("event-time timeout closes a silent session (T2, streaming)") {
     implicit val sqlCtx = spark.sqlContext
     import java.sql.Timestamp
@@ -356,6 +381,13 @@ class AdsbStreamSpec extends SparkSpec {
     val flights = spark.table("adsb_timeout_out")
       .where("kind = 'flight' AND hexident = 'AAAAAA'")
     assert(flights.count() === 1)
+    // the timeout evicts A's state: both aircraft are resident at the
+    // peak, only B once A's session has closed
+    val stateRows = q.recentProgress.toSeq.flatMap(_.stateOperators
+      .filter(_.operatorName == "flatMapGroupsWithState")
+      .map(_.numRowsTotal))
+    assert(stateRows.max === 2L, s"state rows per trigger: $stateRows")
+    assert(stateRows.last === 1L, s"state rows per trigger: $stateRows")
   }
 
   test("streaming replay equals batch replay (3 micro-batches)") {

@@ -1,218 +1,27 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.adsb.Sbs
-import graft.operators.{Anomaly, Bm25, Ivf}
 
-/** The "resident service" claim, actually exercised (round-8 verdict
-  * ask #7): every streaming surface in the repo — Adsb sessionize,
-  * Doc curation, Event quarantine, Lex BM25 ingest, Ann IVF serving,
-  * Media ingest — runs CONCURRENTLY on the RocksDB state store for
-  * many micro-batches of advancing event time, with a mid-run
-  * stop/restart of the media stream from its checkpoint. Asserted:
-  *
-  *  - every sink receives exactly the rows its gates/dedup imply
-  *    (concurrency and recovery change nothing — no loss, no dupes);
-  *  - the stateful operators' state is BOUNDED: after the watermark
-  *    passes a wave, its dedup keys are evicted, so peak state never
-  *    approaches total-keys-fed and the final state is at most the
-  *    last waves' keys (the metric a resident service watches).
-  */
+/** Crash recovery of the ADS-B sessionizer on the RocksDB state
+  * store: a query killed mid-stream, with messages parked in reorder
+  * buffers and sessions open, resumes from its checkpoint and ends
+  * byte-identical to the batch replay. */
 class StreamingSoakSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  /** Distinct-content 8×8 BMP per id (the MediaStreamSpec builder
-    * plus id-salted pixel bytes so content dedup sees real blobs). */
-  private def bmp(id: Long): Array[Byte] = {
-    val width = 8; val height = 8
-    val stride = (width * 3 + 3) / 4 * 4
-    val size = 54 + height * stride
-    val b = java.nio.ByteBuffer.allocate(size)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(size).putInt(0).putInt(54)
-    b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
-    b.putInt(0).putInt(height * stride).putInt(2835).putInt(2835)
-    b.putInt(0).putInt(0)
-    val arr = b.array()
-    // high-contrast id-salted fill: distinct content per id for the
-    // dedup stage AND enough pixel variance to pass the flat-image
-    // ingest gate (a near-zero fill would now be gated as placeholder)
-    (54 until size).foreach(i =>
-      arr(i) = ((id * 31 + i * 89) % 251).toByte)
-    arr
-  }
-
-  private val goodText =
-    "the quick brown fox jumps over the lazy dog and runs far into " +
-      "the quiet green hills of the old countryside before the sun is " +
-      "down and the long warm evening settles in over the wide river " +
-      "valley with a slow golden light on the water"
-
-  test("six-stream soak: RocksDB, bounded state, mid-run checkpoint recovery") {
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    AdsbStream.useRocksDbStateStore(spark)
-    try {
-      val waves = 5
-      val keysPerWave = 8
-
-      // ---- sources ----
-      val adsbIn = MemoryStream[graft.adsb.AdsbMsg]
-      val docIn = MemoryStream[(Long, String, String, Timestamp)]
-      val evIn = MemoryStream[(String, Double)]
-      val lexIn = MemoryStream[(Long, String)]
-      val annIn = MemoryStream[(Long, Array[Float])]
-      val mediaIn = MemoryStream[(Long, Array[Byte], Timestamp)]
-
-      // ---- static fixtures ----
-      val adsbMsgs = Sbs.messages(
-        Sbs.fixtureLines(spark, "adsb_message_stream.txt"))
-        .collect().sortBy(_.seq)
-      val refStats = Anomaly.referenceStats(
-        (1 to 200).map(i => ("purchase", 50.0 + (i % 11) - 5))
-          .toDF("event_type", "value"),
-        col("event_type"), col("value"))
-      val emb = spark.read
-        .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      val ivfIndex = Ivf.build(emb, col("vec_id"), col("embedding"), k = 4)
-      val ivfDir = Files.createTempDirectory("soak-ivf").resolve("i").toString
-      Ivf.persist(ivfIndex, ivfDir)
-      val annQueries = emb.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])].take(waves)
-
-      // ---- sinks / checkpoints ----
-      def dir(p: String) = Files.createTempDirectory(p).toString
-      val docOut = dir("soak-doc-out"); val docCk = dir("soak-doc-ck")
-      val evOut = dir("soak-ev-out"); val evCk = dir("soak-ev-ck")
-      val lexIdx = dir("soak-lex-idx") + "/i"; val lexCk = dir("soak-lex-ck")
-      val annOut = dir("soak-ann-out"); val annCk = dir("soak-ann-ck")
-      val mediaOut = dir("soak-media-out"); val mediaCk = dir("soak-media-ck")
-      val adsbCk = dir("soak-adsb-ck")
-
-      // ---- start all six ----
-      val adsbQ = AdsbStream.sessionize(adsbIn.toDS()).writeStream
-        .format("memory").queryName("soak_adsb").outputMode("append")
-        .option("checkpointLocation", adsbCk).start()
-      val docQ = DocStream.start(
-        docIn.toDF().toDF("doc_id", "text", "lang", "ingest_ts"),
-        docOut, docCk)
-      val evQ = EventStream.startQuarantine(
-        evIn.toDF().toDF("event_type", "value"), refStats, evOut, evCk)
-      val lexQ = LexStream.startIngest(lexIn.toDF().toDF("doc_id", "text"),
-        lexIdx, lexCk, col("doc_id"), col("text"))
-      val annQ = AnnStream.startIvf(annIn.toDF().toDF("qid", "qvec"),
-        ivfDir, ivfIndex.codebook, annOut, annCk, topK = 3, nProbe = 4)
-      def startMedia() = MediaStream.start(
-        mediaIn.toDF().toDF("media_id", "content", "ingest_ts"),
-        mediaOut, mediaCk, maxBytes = 1 << 20, watermark = "10 minutes")
-      var mediaQ = startMedia()
-
-      // ---- drive the waves: event time advances 1 h per wave, far
-      // past the 10 min / 10 s watermarks, so each wave's dedup keys
-      // are evictable by the next ----
-      val stateTotals = scala.collection.mutable.ArrayBuffer[Long]()
-      var adsbAt = 0
-      for (w <- 0 until waves) {
-        val t = ts(f"2024-03-01 ${10 + w}%02d:00:00")
-        val ids = (0 until keysPerWave).map(k => (w * keysPerWave + k).toLong)
-        // media: every blob delivered TWICE (re-crawl) within the wave
-        val blobs = ids.map(id => (id, bmp(id), t))
-        mediaIn.addData(blobs ++ blobs.map { case (i, b, tt) =>
-          (i + 100000L, b.clone(), tt) })
-        // docs: distinct texts plus one exact in-wave duplicate
-        val docs = ids.map(id =>
-          (id, goodText + " wave marker " + id, "en", t))
-        docIn.addData(docs :+ (ids.head + 100000L, docs.head._2, "en", t))
-        // events: in-band bulk + one obvious spike per wave
-        evIn.addData(
-          ids.map(_ => ("purchase", 50.5)) :+ (("purchase", 5000.0)))
-        // lex: one doc per wave with a wave-unique token
-        lexIn.addData(Seq((w.toLong, s"soaktoken$w " + goodText)))
-        // ann: one query per wave
-        annIn.addData(Seq(annQueries(w)))
-        // adsb: replay a slice of the fixture
-        val slice = adsbMsgs.slice(adsbAt, adsbAt + 300)
-        adsbAt += 300
-        if (slice.nonEmpty) adsbIn.addData(slice.toSeq)
-
-        Seq(adsbQ, docQ, evQ, lexQ, annQ).foreach(_.processAllAvailable())
-        mediaQ.processAllAvailable()
-        mediaQ.recentProgress.flatMap(_.stateOperators)
-          .lastOption.foreach(s => stateTotals += s.numRowsTotal)
-
-        if (w == 2) { // mid-run recovery: stop and restart from ckpt
-          mediaQ.stop()
-          mediaQ = startMedia()
-        }
-      }
-      Seq(adsbQ, docQ, evQ, lexQ, annQ, mediaQ).foreach { q =>
-        q.processAllAvailable(); q.stop()
-      }
-
-      // ---- exactly-the-gated-rows, across concurrency + restart ----
-      val mediaKept = spark.read.parquet(mediaOut)
-        .select("media_id").as[Long].collect()
-      // one stored copy per distinct blob: id or its +100000 re-crawl
-      assert(mediaKept.length === waves * keysPerWave,
-        s"media kept ${mediaKept.length}")
-      assert(mediaKept.map(_ % 100000L).toSet ===
-        (0 until waves * keysPerWave).map(_.toLong).toSet)
-
-      val docKept = spark.read.parquet(docOut)
-        .select("doc_id").as[Long].collect()
-      assert(docKept.length === waves * keysPerWave, s"docs ${docKept.length}")
-
-      val quarantined = spark.read.parquet(evOut)
-      assert(quarantined.count() === waves) // exactly the spikes
-      assert(quarantined.select("value").as[Double].collect()
-        .forall(_ === 5000.0))
-
-      LexStream.finalizeIngest(spark, lexIdx)
-      val hits = Bm25.searchAt(spark, lexIdx,
-        Seq((0L, "soaktoken3")).toDF("qid", "qtext"), topK = 5)
-      assert(hits.select("doc_id").as[Long].collect().toSeq === Seq(3L))
-
-      assert(spark.read.parquet(annOut).count() === waves * 3L)
-      assert(spark.table("soak_adsb").count() > 0)
-
-      // ---- bounded state: watermark eviction engaged. Total keys
-      // fed = waves*keysPerWave*2; if nothing ever expired the final
-      // state would hold ~all of them — it must hold at most the
-      // last two waves' worth (wave w arrives before the watermark
-      // from wave w-1's data is committed, so one wave may linger) ----
-      assert(stateTotals.nonEmpty, "no state-operator progress captured")
-      val finalState = stateTotals.last
-      assert(finalState <= 2L * keysPerWave * 2,
-        s"media dedup state not evicting: $stateTotals")
-      assert(finalState < waves * keysPerWave * 2L,
-        s"state grew unbounded: $stateTotals")
-    } finally {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("ooo sessionizer: kill + RocksDB recovery mid-stream ≡ batch") {
     // round-13 (VERDICT r12 ask #6): the watermark reorder buffer
     // (`ReorderState` = pending rows + open session) is exactly the
-    // state a crash can corrupt, and the six-stream soak above
-    // predates it. Drive the SAME deterministic bounded shuffle the
-    // adsb_stream_parity_ooo gate uses, kill the query mid-stream —
+    // state a crash can corrupt. Drive the SAME deterministic
+    // bounded shuffle the adsb_stream_parity_ooo gate uses, kill
+    // the query mid-stream —
     // with messages parked in reorder buffers AND sessions open —
     // restart from the RocksDB checkpoint, and require the final
     // row set to remain byte-identical to the batch sessionizer's
