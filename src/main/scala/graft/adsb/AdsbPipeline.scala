@@ -54,24 +54,17 @@ object AdsbPipeline {
     }
   }
 
-  /** Full tagged output of the pipeline.
-    *
-    * `arrivalOrder = true` folds messages in arrival (seq) order — the
-    * reference's exact live behavior, which never reorders
-    * (`adsb_logger.py:40-66`, T12). The default event-time order is
-    * the deterministic replay semantics (identical when the input is
-    * time-monotone, as real captures are). */
-  def process(
-      msgs: Dataset[AdsbMsg],
-      arrivalOrder: Boolean = false): Dataset[Out] = {
+  /** Full tagged output of the pipeline: each aircraft's messages fold
+    * in event-time order, the deterministic replay semantics (the
+    * reference folds in arrival order, `adsb_logger.py:40-66`, T12;
+    * the two agree when the input is time-monotone, as real captures
+    * are). */
+  def process(msgs: Dataset[AdsbMsg]): Dataset[Out] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    val sortCols =
-      if (arrivalOrder) Seq(col("hexident"), col("seq"))
-      else Seq(col("hexident"), col("gen_date_time"), col("seq"))
     msgs
       .repartition(col("hexident"))
-      .sortWithinPartitions(sortCols: _*)
+      .sortWithinPartitions(col("hexident"), col("gen_date_time"), col("seq"))
       .mapPartitions { it =>
         foldRuns(it, (m: AdsbMsg) => m.hexident)(
           FlightStateMachine.processSorted)

@@ -50,12 +50,13 @@ object Meta {
       // gate row), generated by tools/fixtures/gen_r13_media.py
       "X32.bmp")
 
-  /** Extract the bundled sample silhouettes to a temp dir (for S5). */
-  // same once-per-JVM rationale as resourcePath
-  private lazy val extractedSilhouettes: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sil")
-    bundledSilhouettes.foreach { n =>
-      val in = getClass.getResourceAsStream(s"/meta/silhouettes/$n")
+  /** Copy the bundled `/meta/<sub>/` files `names` into a fresh temp
+    * directory; every file and the directory are deleted on exit. */
+  private def extractBundle(prefix: String, sub: String,
+      names: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    names.foreach { n =>
+      val in = getClass.getResourceAsStream(s"/meta/$sub/$n")
       require(in != null, s"missing $n")
       java.nio.file.Files.copy(in, dir.resolve(n))
       dir.resolve(n).toFile.deleteOnExit()
@@ -63,6 +64,11 @@ object Meta {
     dir.toFile.deleteOnExit()
     dir.toString
   }
+
+  /** Extract the bundled sample silhouettes to a temp dir (for S5). */
+  // same once-per-JVM rationale as resourcePath
+  private lazy val extractedSilhouettes: String =
+    extractBundle("graft-sil", "silhouettes", bundledSilhouettes)
 
   def silhouettesDir(): String = extractedSilhouettes
 
@@ -199,17 +205,8 @@ object Meta {
     * deterministic stand-ins for codec payloads, carrying the
     * byte-level structure the frame/energy plumbing needs (the
     * decode seam policy of `Multimodal`). */
-  private lazy val extractedMedia: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media")
-    bundledMedia.foreach { n =>
-      val in = getClass.getResourceAsStream(s"/meta/media/$n")
-      require(in != null, s"missing $n")
-      java.nio.file.Files.copy(in, dir.resolve(n))
-      dir.resolve(n).toFile.deleteOnExit()
-    }
-    dir.toFile.deleteOnExit()
-    dir.toString
-  }
+  private lazy val extractedMedia: String =
+    extractBundle("graft-media", "media", bundledMedia)
 
   def mediaDir(): String = extractedMedia
 

@@ -106,8 +106,4 @@ object DotProduct {
   /** Column API: dot product of two array<float> columns. */
   def dotF(a: Column, b: Column): Column =
     Bridge.column(DotProductF(Bridge.expression(a), Bridge.expression(b)))
-
-  /** SQL surface: `SELECT dot_product_f(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Bridge.registerBinary(spark, "dot_product_f", DotProductF(_, _))
 }

@@ -138,48 +138,6 @@ object ImageIo {
     out.toByteArray
   }
 
-  /** REAL resize: decode, NEAREST-NEIGHBOR sample to (w, h), re-encode
-    * as PNG. Nearest-neighbor (pixel (x, y) ← source (x·sw/w, y·sh/h),
-    * the [[aHash]] grid-mapping convention) rather than an
-    * interpolating `Graphics2D` scale because the SAMPLED PIXELS are
-    * bit-deterministic across JVMs/platforms — an engine primitive
-    * must not produce different corpora on different executor
-    * images. The PNG CONTAINER bytes around those pixels are
-    * whatever this JVM's encoder emits (the [[toPng]] caveat):
-    * downstream hashing/dedup of resized output must key on decoded
-    * pixels (e.g. [[aHash]]), not encoded bytes, to be
-    * fleet-portable. Null on undecodable/oversized input, and on
-    * non-positive targets. */
-  def resize(b: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return null
-    val d = dims(b)
-    if (d == null || d(0) <= 0 || d(1) <= 0 ||
-      d(0).toLong * d(1) > MaxPixels) return null
-    val img =
-      try ImageIO.read(new ByteArrayInputStream(b))
-      catch { case _: Exception => null }
-    if (img == null) return null
-    val out = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        // Long index math: x·srcW can pass 2^31 for cap-passing
-        // degenerate-wide sources (e.g. 2^26×1), and an Int overflow
-        // here would throw AIOOBE — violating the NULL contract
-        out.setRGB(x, y,
-          img.getRGB((x.toLong * img.getWidth / w).toInt,
-            (y.toLong * img.getHeight / h).toInt))
-        x += 1
-      }
-      y += 1
-    }
-    val buf = new java.io.ByteArrayOutputStream()
-    if (!ImageIO.write(out, "png", buf)) return null
-    buf.toByteArray
-  }
-
   /** Column API: header-probed [width, height] (array<int>) or NULL. */
   def imageDims(bin: Column): Column =
     Bridge.column(ImageDimsExpr(Bridge.expression(bin)))
@@ -191,46 +149,6 @@ object ImageIo {
   /** Column API: losslessly transcode to PNG (binary) or NULL. */
   def imageToPng(bin: Column): Column =
     Bridge.column(ImageToPngExpr(Bridge.expression(bin)))
-
-  /** Column API: deterministic nearest-neighbor resize → PNG | NULL. */
-  def imageResize(bin: Column, w: Int, h: Int): Column =
-    Bridge.column(ImageResizeExpr(Bridge.expression(bin), w, h))
-}
-
-/** `image_resize(binary, w, h)` → binary PNG | NULL. Target dims are
-  * plan-time constants (the pipeline-config shape), not per-row. */
-case class ImageResizeExpr(child: Expression, w: Int, h: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_resize"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"image_resize needs binary, got ${t.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ImageIo.resize(input.asInstanceOf[Array[Byte]], w, h)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bin => {
-      val out = ctx.freshName("resized")
-      s"""
-         |byte[] $out = graft.functions.ImageIo.resize($bin, $w, $h);
-         |if ($out == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): ImageResizeExpr =
-    copy(child = newChild)
 }
 
 /** `image_to_png(binary)` → binary PNG | NULL. */

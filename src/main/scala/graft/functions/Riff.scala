@@ -277,8 +277,6 @@ object Riff {
 
   private val Strl4cc = pack4cc("strl")
   private val Strh4cc = pack4cc("strh")
-  private val Strf4cc = pack4cc("strf")
-  private val Auds4cc = pack4cc("auds")
 
   /** The stream-header locator (round-12 review #2; generalized
     * round-14 for the video codec lookup): walk the `hdrl` range for
@@ -326,12 +324,6 @@ object Riff {
     }
     -1L
   }
-
-  /** The audio stream-format locator — `findStreamChunk` at
-    * ('auds', 'strf'), kept as the named entry point the audio gates
-    * and fuzz properties pin. */
-  def findAudsStrf(b: Array[Byte], start: Int, end: Int): Long =
-    findStreamChunk(b, start, end, Auds4cc, Strf4cc)
 
   /** TRUE iff the bounded walk over `[start, end)` terminated because
     * it CONSUMED the range (next header would not fit), FALSE iff the

@@ -46,17 +46,10 @@ import graft.functions.TextFunctions
   *
   * Persist/load mirror the ANN sidecar convention: the postings table
   * is the index, idf and the scalar stats live in a `__quantizer`
-  * sidecar, tombstone deletes via [[IndexMaintenance]] filter doc_ids
-  * on every read path. The sidecar REPLACES through a staged
-  * rename-aside swap (never delete-then-write), and the read path
-  * self-recovers from every crash state of that swap, so a serving
-  * tier racing a refresh never fails on a half-written sidecar.
-  * Unlike the vector indexes, APPEND must refresh global statistics
-  * (df, N, avgdl change with every batch), so [[appendPersisted]]
-  * rebuilds the sidecar from the grown postings — one aggregation
-  * scan, still no retraining equivalent; the idf/stats formulas live
-  * in ONE place ([[statsIdfOf]]) shared by build and append, so the
-  * paths cannot drift.
+  * sidecar. The sidecar REPLACES through a staged rename-aside swap
+  * (never delete-then-write), and the read path self-recovers from
+  * every crash state of that swap, so a serving tier racing a
+  * re-persist never fails on a half-written sidecar.
   *
   * Reference scope: the reference engine has no lexical retrieval;
   * this is part of the beyond-reference training-data layer (SURVEY
@@ -91,9 +84,8 @@ object Bm25 {
     queries.select(col("qid"),
       explode(termsOf(col("qtext"))).as("term")).distinct()
 
-  /** (stats, idf) from a postings frame — the SINGLE source of the
-    * corpus-statistics formulas, shared by [[build]] and the
-    * append refresh. */
+  /** (stats, idf) from a postings frame: the corpus-statistics
+    * formulas of [[build]]. */
   private def statsIdfOf(postings: DataFrame): (DataFrame, DataFrame) = {
     val docLens = postings.select(col("doc_id"), col("dl")).distinct()
     val stats = docLens.agg(
@@ -110,9 +102,7 @@ object Bm25 {
 
   /** Index `docs`. Zero-token documents are excluded from the corpus
     * statistics (N, avgdl) as well as the postings — they can never
-    * match a term, and counting them only in [[build]] would make
-    * the postings-derived stats refresh of [[appendPersisted]]
-    * drift. */
+    * match a term. */
   def build(docs: DataFrame, idCol: Column, textCol: Column,
       k1: Double = 1.2, b: Double = 0.75): Index = {
     val perDocTf = docs.select(idCol.as("doc_id"),
@@ -156,9 +146,8 @@ object Bm25 {
 
   /** Write the at-rest index: postings as the data table (identity
     * column stored as `id` — the at-rest convention every persisted
-    * index shares, so [[IndexMaintenance]]'s tombstone filter and
-    * compaction purge apply unchanged), idf + stats in a metadata
-    * sidecar (staged swap — [[writeMeta]]). */
+    * index shares), idf + stats in a metadata sidecar (staged swap —
+    * [[writeMeta]]). */
   def persist(index: Index, path: String): Unit = {
     index.postings.withColumnRenamed("doc_id", "id")
       .withColumn("stride", strideOf(col("term")))
@@ -169,33 +158,20 @@ object Bm25 {
     writeMeta(index.postings.sparkSession, path, index)
   }
 
-  /** The at-rest postings read shared by every load path: optional
-    * static stride pruning, tombstone filter, layout column
-    * `stride` dropped. */
+  /** The at-rest postings of `strides` (a static partition filter),
+    * layout column `stride` dropped. */
   private def atRestPostings(spark: SparkSession, path: String,
-      strides: Option[Seq[Long]]): DataFrame = {
-    val raw = spark.read.parquet(path)
-    val pruned = strides.fold(raw)(ss =>
-      raw.where(col("stride").isInCollection(ss)))
-    IndexMaintenance.filterTombstones(spark, path, pruned)
+      strides: Seq[Long]): DataFrame =
+    spark.read.parquet(path)
+      .where(col("stride").isInCollection(strides))
       .drop("stride")
       .withColumnRenamed("id", "doc_id")
-  }
-
-  /** Rebuild an [[Index]] from a [[persist]]ed path, with tombstoned
-    * doc_ids filtered from the postings. */
-  def loadIndex(spark: SparkSession, path: String): Index = {
-    val (meta, k1, b) = loadSidecar(spark, path)
-    Index(atRestPostings(spark, path, None),
-      meta.select(col("term"), col("idf")),
-      meta.select(col("n_docs"), col("avgdl")).limit(1), k1, b)
-  }
 
   /** Serve a [[persist]]ed index from the path alone, reading ONLY
     * the stride directories the query terms hash into: the distinct
     * query-term strides (≤ [[Strides]] values — bounded index
     * metadata) become a static partition filter, so the scan skips
-    * every shard no query term lands in. The [[IvfPq.searchPersisted]]
+    * every shard no query term lands in. The [[Ivf.searchPersisted]]
     * pattern applied to lexical retrieval. Only the metadata sidecar
     * loads eagerly — the unpruned postings plan is never built. */
   def searchAt(spark: SparkSession, path: String, queries: DataFrame,
@@ -206,34 +182,10 @@ object Bm25 {
       .select(strideOf(col("term")).as("s")).distinct()
       .collect().map(_.getLong(0))
     scoreRank(Index(
-      atRestPostings(spark, path, Some(strides.toSeq)),
+      atRestPostings(spark, path, strides.toSeq),
       meta.select(col("term"), col("idf")),
       meta.select(col("n_docs"), col("avgdl")).limit(1), k1, b),
       qterms, topK, roundDigits)
-  }
-
-  /** Append a document batch to a [[persist]]ed index. Postings for
-    * the batch append as new files (cost ∝ batch); df/idf/N/avgdl are
-    * then REBUILT from the grown postings table (cost: one
-    * aggregation scan of the narrow postings columns — BM25's global
-    * statistics genuinely change with every batch, so there is no
-    * FAISS-`add`-style stats-free append). Tombstoned doc_ids are
-    * excluded from the refreshed statistics. Same contract as the
-    * ANN appends otherwise: disjoint ids, caller-provided
-    * exactly-once batching, periodic
-    * [[IndexMaintenance.compactPersisted]] (flat layout). */
-  def appendPersisted(spark: SparkSession, path: String,
-      docs: DataFrame, idCol: Column, textCol: Column): Unit = {
-    val (_, k1, b) = loadSidecar(spark, path)
-    build(docs, idCol, textCol, k1, b).postings
-      .withColumnRenamed("doc_id", "id")
-      .withColumn("stride", strideOf(col("term")))
-      .repartition(col("stride"))
-      .write.mode("append").partitionBy("stride").parquet(path)
-    // rebuild idf/stats from the grown, tombstone-filtered postings
-    val postings = atRestPostings(spark, path, None)
-    val (stats, idf) = statsIdfOf(postings)
-    writeMeta(spark, path, Index(postings, idf, stats, k1, b))
   }
 
   // ---- metadata sidecar: staged swap + self-recovering reads ------

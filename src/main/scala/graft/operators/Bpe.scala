@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** BPE tokenizer training and encoding (Sennrich et al. 2016):
-  * count every adjacent symbol pair across the corpus weighted by
-  * word frequency, merge the top pair into a new symbol, recount —
-  * and encode text by replaying the learned merges in rank order.
+/** BPE tokenizer training (Sennrich et al. 2016): count every
+  * adjacent symbol pair across the corpus weighted by word frequency,
+  * merge the top pair into a new symbol, recount.
   *
   * Scale design (100 TB corpus): occurrences collapse to the DISTINCT
   * word vocabulary first (one map-side-combinable groupBy — Zipf
@@ -27,8 +26,7 @@ object Bpe {
   /** A trained tokenizer: `merges` = (rank, a, b, n) in training
     * order; `vocab` = (word, freq, toks) — every corpus word with its
     * final segmentation after all merges. Encoding corpus text is a
-    * word-level join against `vocab`; encoding UNSEEN text replays
-    * `merges` via [[encodeWords]]. */
+    * word-level join against `vocab`. */
   final case class BpeModel(merges: DataFrame, vocab: DataFrame)
 
   /** One-pass, left-to-right, non-overlapping application of merge
@@ -87,26 +85,6 @@ object Bpe {
       }
     }
     BpeModel(learned.toSeq.toDF("rank", "a", "b", "n"), seg)
-  }
-
-  /** Encode arbitrary words (one per row of `words`) by replaying a
-    * DRIVER-HELD merge list in rank order — the serve path for text
-    * the trainer never saw. Returns (word, toks). The merge count is
-    * bounded vocabulary metadata (the broadcast-codebook convention);
-    * each merge is one fold over a short array, fused into a single
-    * projection — no shuffle, no join. On the training corpus this
-    * agrees with `model.vocab` exactly (spec-pinned). */
-  def encodeWords(words: DataFrame, wordCol: Column,
-      merges: Seq[(String, String)]): DataFrame = {
-    // guard the empty word: sequence(1, 0) DESCENDS (the p5b hazard)
-    // and would invent two phantom '' tokens
-    val init = when(length(col("word")) === 0,
-      array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1))))
-    val enc = merges.foldLeft(init) {
-      case (c, (a, b)) => applyMerge(c, a, b) }
-    words.select(wordCol.as("word")).select(col("word"), enc.as("toks"))
   }
 
   /** Top `topK` adjacent character pairs: `pair`, `n` (occurrences

@@ -127,26 +127,16 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard over a *candidate pair list* — the
-    * production shape at 100 TB: [[minhashCandidates]] proposes,
-    * this verifies. Cost is Σ per-candidate shingle overlap (each
-    * candidate pair explodes to its matching shingle hashes via two
-    * hash joins), not the all-pairs quadratic of [[jaccardPairs]].
+    * production shape at 100 TB: [[minhashCandidatesFromShingles]]
+    * proposes, this verifies. Cost is Σ per-candidate shingle overlap
+    * (each candidate pair explodes to its matching shingle hashes via
+    * two hash joins), not the all-pairs quadratic of [[jaccardPairs]].
     * Semantics are identical to [[jaccardPairs]] restricted to
-    * `candidates` (id_a < id_b assumed, as minhashCandidates emits). */
-  def jaccardVerify(
-      docs: DataFrame,
-      candidates: DataFrame,
-      idCol: Column,
-      textCol: Column,
-      n: Int,
-      threshold: Double): DataFrame =
-    jaccardVerifyFromShingles(shingleRows(docs, idCol, textCol, n),
-      candidates, threshold)
-
-  /** [[jaccardVerify]] over a prebuilt (id, sh) shingle table — cache
-    * and share it with [[minhashCandidatesFromShingles]] so the
-    * candidate and verify stages scan/shingle the corpus once, not
-    * twice (the shingle explode is the dominant scan at scale). */
+    * `candidates` (id_a < id_b assumed, as the candidate stage
+    * emits). Takes a prebuilt (id, sh) shingle table — cache and
+    * share it with [[minhashCandidatesFromShingles]] so the candidate
+    * and verify stages scan/shingle the corpus once, not twice (the
+    * shingle explode is the dominant scan at scale). */
   def jaccardVerifyFromShingles(
       shingles: DataFrame,
       candidates: DataFrame,

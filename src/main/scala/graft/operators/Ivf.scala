@@ -10,9 +10,9 @@ import graft.functions.DotProduct.dotF
   * clustering as the coarse quantizer, then queries probe only their
   * `nProbe` nearest clusters.
   *
-  * The 100 TB path alongside [[Similarity.lshTopK]]: the corpus
-  * shuffles ONCE by cluster id at build time (`Sinks.writeClustered`
-  * persists it co-located), and a query touches nProbe/k of the data.
+  * The 100 TB path: the corpus shuffles ONCE by cluster id at build
+  * time ([[persist]] writes one directory per cluster), and a query
+  * touches nProbe/k of the data.
   *
   * The quantizer codebook (k centroids, k ≪ corpus) lives on the
   * driver between Lloyd rounds — standard IVF practice, it is the
@@ -292,11 +292,9 @@ object Ivf {
     * here for ANN). Contract: batch ids are disjoint from indexed
     * ids, and the caller provides exactly-once batch semantics.
     * Appended vectors are quantized by the ORIGINAL codebook;
-    * rebuild when the embedding distribution drifts. Each batch adds
-    * one file per touched cluster directory — run
-    * [[IndexMaintenance.compactPersisted]] periodically to collapse
-    * the growth (and [[IndexMaintenance.deletePersisted]] for the
-    * remove-ids half of the lifecycle). */
+    * rebuild when the embedding distribution drifts
+    * ([[IndexMaintenance]]). Each batch adds one file per touched
+    * cluster directory. */
   def appendPersisted(spark: org.apache.spark.sql.SparkSession,
       path: String, newVectors: DataFrame, idCol: Column,
       vecCol: Column, payload: Option[DataFrame] = None): Unit = {
@@ -354,12 +352,10 @@ object Ivf {
     * (top-k AND radius — one definition so their eligibility
     * semantics can never diverge): probe the codebook, collect the
     * probed cluster ids into a static partition filter, apply the
-    * caller's pre-filter inside the pruned scan, and anti-join the
-    * tombstone sidecar. probeRows is a cheap projection over the
-    * (small) query side — recomputing it for the cid collect beats
-    * leaking a cache entry per search call (nothing here ever
-    * unpersists). Ids deleted via IndexMaintenance.deletePersisted
-    * never return (sidecar anti-join; a no-op when none exist). */
+    * caller's pre-filter inside the pruned scan. probeRows is a cheap
+    * projection over the (small) query side — recomputing it for the
+    * cid collect beats leaking a cache entry per search call (nothing
+    * here ever unpersists). */
   private def probedEligible(spark: org.apache.spark.sql.SparkSession,
       path: String, codebook: Array[(Int, Array[Float], Double)],
       queries: DataFrame, nProbe: Int,
@@ -367,11 +363,10 @@ object Ivf {
     val probes = probeRows(queries, codebook, nProbe)
     val probedCids = probes.select(col("cid")).distinct()
       .collect().map(_.getInt(0))
-    val assigned = IndexMaintenance.filterTombstones(spark, path,
-      spark.read.parquet(path)
-        .where(col("cid").isin(probedCids.map(Int.box): _*))
-        .where(corpusFilter)
-        .select(col("id"), col("vec"), col("cid")))
+    val assigned = spark.read.parquet(path)
+      .where(col("cid").isin(probedCids.map(Int.box): _*))
+      .where(corpusFilter)
+      .select(col("id"), col("vec"), col("cid"))
     (probes, assigned)
   }
 
@@ -395,7 +390,7 @@ object Ivf {
     * order. Cost: one pruned scan + one scoring join, then a
     * |budgets|-way explode of already-scored 24-byte rows — vs
     * Σ(budget) cluster scans for the loop of individual searches.
-    * Tombstones and probe order behave exactly as [[searchAt]]. */
+    * Probe order behaves exactly as in [[searchAt]]. */
   def searchSweepAt(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, topK: Int, budgets: Seq[Int],
       roundDigits: Int = 5): DataFrame = {
@@ -439,7 +434,7 @@ object Ivf {
     * cluster, so the static cid partition filter buys nothing), the
     * cid match becomes a plain SHUFFLE equi-join (never a broadcast of
     * a corpus-sized probe table), and AQE's skew-join splits hot
-    * clusters. Still tombstone-aware and pre-filterable. The join
+    * clusters. Still pre-filterable. The join
     * fan-out is Σ_probed-cluster |A∩cluster| per query — nProbe/k of
     * an all-pairs cross, which is the entire point. */
   def knnJoinAt(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -448,10 +443,9 @@ object Ivf {
     val codebook = loadCodebook(spark, path)
     if (codebook.isEmpty) return emptyResult(queries)
     val probes = probeRows(queries, codebook, nProbe)
-    val assigned = IndexMaintenance.filterTombstones(spark, path,
-      spark.read.parquet(path)
-        .where(corpusFilter)
-        .select(col("id"), col("vec"), col("cid")))
+    val assigned = spark.read.parquet(path)
+      .where(corpusFilter)
+      .select(col("id"), col("vec"), col("cid"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("id"))
     assigned.join(probes, Seq("cid"))
@@ -468,8 +462,8 @@ object Ivf {
     * FAISS `range_search` analog (d5's threshold semantics as a
     * serve-path API; top-k asks "the best few", radius asks "all
     * within τ" — the dedup-against-index and recall-sweep question).
-    * Identical probed-cluster partition pruning, tombstone anti-join
-    * and pre-filter semantics as [[searchPersisted]], but NO per-query
+    * Identical probed-cluster partition pruning and pre-filter
+    * semantics as [[searchPersisted]], but NO per-query
     * window: the cut is a plain filter fused into the scoring
     * projection, so nothing ranks and the only shuffle is the
     * presentation sort. Result size is data-dependent (bounded by the

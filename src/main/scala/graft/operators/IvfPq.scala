@@ -126,25 +126,6 @@ object IvfPq {
     Similarity.rerankExact(search(index, queries, candK, nProbe),
       corpus, queries, topK, roundDigits, idCol, vecCol)
 
-  /** [[persist]] with payload metadata co-located in the coded
-    * inverted lists — [[Ivf.persistWithPayload]] for the compressed
-    * path: `payload` = (id, metadata...) LEFT-joins the codes by id
-    * once at write time (missing payload ⇒ NULL metadata: the vector
-    * stays in the index, reachable unfiltered, excluded by any
-    * predicate — never silently dropped), enabling
-    * [[searchPersisted]]'s `corpusFilter` pre-filter to evaluate
-    * inside the probed clusters' scan of the 8–16-byte code rows
-    * (filtered ANN over compressed storage — the predicate prunes
-    * BEFORE any ADC arithmetic). Grow with
-    * [[appendPersisted]]`(..., payload = Some(...))` to keep the file
-    * schema uniform. */
-  def persistWithPayload(index: Index, payload: DataFrame,
-      path: String): Unit = {
-    index.coded.join(payload, Seq("id"), "left")
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeQuantizers(index, path)
-  }
-
   /** Write the coded corpus PARTITIONED BY cluster id — the at-rest
     * IVF-PQ layout: each cluster's CODES (8–16 bytes each, not float
     * vectors) are their own partition directory, so a probe-filtered
@@ -152,8 +133,8 @@ object IvfPq {
     * table. The quantizers (coarse centroids + the m sub-codebooks —
     * index metadata, d·(kCoarse+k) floats total) land in a
     * `__quantizer` sidecar, so the persisted index is self-contained:
-    * [[loadIndex]]/[[searchAt]] serve it in a fresh session with no
-    * driver-held handle. */
+    * [[loadIndex]]/[[searchRadiusAt]] serve it in a fresh session with
+    * no driver-held handle. */
   def persist(index: Index, path: String): Unit = {
     index.coded.write.mode("overwrite").partitionBy("cid").parquet(path)
     writeQuantizers(index, path)
@@ -178,7 +159,7 @@ object IvfPq {
     * from the sidecar (norms/half-norms recomputed — derived data),
     * `coded` read straight from the partitioned parquet (uncached; a
     * [[search]] over it gets dynamic partition pruning from the cid
-    * join, [[searchPersisted]]'s static `cid IN` filter is stronger). */
+    * join, [[searchRadiusAt]]'s static `cid IN` filter is stronger). */
   def loadIndex(spark: SparkSession, path: String): Index = {
     val rows = spark.read.parquet(Ivf.quantizerPath(path))
       .select(col("kind"), col("a"), col("b"), col("vec")).collect()
@@ -196,88 +177,9 @@ object IvfPq {
         .sortBy(_._1)
     }
     val dsub = codebooks.head.head._2.length
-    // tombstone-aware: a loaded index's coded frame already excludes
-    // ids deleted via IndexMaintenance.deletePersisted, so the
-    // in-memory ADC path over it cannot resurrect them
-    val coded = IndexMaintenance.filterTombstones(spark, path,
-      spark.read.parquet(path)
-        .select(col("id"), col("cid"), col("codes")))
+    val coded = spark.read.parquet(path)
+      .select(col("id"), col("cid"), col("codes"))
     Index(coarse, codebooks, coded, m, dsub)
-  }
-
-  /** Append a new vector batch to a [[persist]]ed index WITHOUT
-    * retraining (FAISS `add`): one map-side scan assigns the batch
-    * with the existing coarse quantizer AND PQ-encodes it with the
-    * existing codebooks; rows append as new files inside the existing
-    * cluster directories. Same contract as [[Ivf.appendPersisted]]:
-    * disjoint ids, caller-provided exactly-once batching, rebuild on
-    * distribution drift, periodic
-    * [[IndexMaintenance.compactPersisted]] to collapse per-batch file
-    * growth. */
-  def appendPersisted(spark: SparkSession, path: String,
-      newVectors: DataFrame, idCol: Column, vecCol: Column,
-      payload: Option[DataFrame] = None): Unit = {
-    val index = loadIndex(spark, path)
-    // NO id cast (matching Ivf.appendPersisted and build's coded
-    // projection): the caller's id type flows through, so appended
-    // files carry the SAME parquet id type as the persisted ones —
-    // a cast here would mix INT32/INT64 columns in one table
-    val vectors = newVectors.select(idCol.as("id"), vecCol.as("vec"))
-    val coded = Ivf.assign(vectors, index.coarse)
-      .select(col("id"), col("cid"),
-        Pq.encodeExpr(col("vec"), index.codebooks, index.dsub))
-    // payload-carrying indexes (persistWithPayload) must append with
-    // the same payload schema — left join, same missing-row semantics
-    payload.fold(coded)(p => coded.join(p, Seq("id"), "left"))
-      .write.mode("append").partitionBy("cid").parquet(path)
-  }
-
-  /** [[searchPersisted]] with the quantizers loaded from the sidecar —
-    * the fresh-session entry point, as [[Ivf.searchAt]]. */
-  def searchAt(spark: SparkSession, path: String, queries: DataFrame,
-      topK: Int, nProbe: Int = 2, roundDigits: Int = 5,
-      corpusFilter: Column = lit(true)): DataFrame =
-    searchPersisted(spark, path, loadIndex(spark, path),
-      queries, topK, nProbe, roundDigits, corpusFilter)
-
-  /** Search a [[persist]]ed index: the distinct probed cluster ids
-    * become a static `cid IN (...)` partition filter — the scan reads
-    * ONLY the probed cluster directories (spec-pinned plan shape) —
-    * then ADC proceeds as in [[search]]. Only `index`'s driver-side
-    * quantizer metadata is used; its in-memory `coded` frame is not
-    * touched. */
-  def searchPersisted(spark: SparkSession, path: String, index: Index,
-      queries: DataFrame, topK: Int, nProbe: Int = 2,
-      roundDigits: Int = 5,
-      corpusFilter: Column = lit(true)): DataFrame = {
-    if (index.coarse.isEmpty || index.codebooks.head.isEmpty)
-      return emptyResult(queries)
-    val (probes, coded) = probedCoded(spark, path, index, queries,
-      nProbe, corpusFilter)
-    scoreProbedAdc(coded, probes, index.codebooks,
-      index.m, index.dsub, topK, roundDigits)
-  }
-
-  /** The shared serve-path prologue (top-k AND radius — the
-    * Ivf.probedEligible convention on the compressed tier): probes +
-    * the probed clusters' code rows after partition pruning, the
-    * caller's pre-filter, and the tombstone anti-join. Tombstone-aware
-    * as Ivf.searchPersisted. corpusFilter = the
-    * filtered-ANN pre-filter over payload columns written by
-    * persistWithPayload: evaluates in the pruned scan, BEFORE any ADC
-    * arithmetic. */
-  private def probedCoded(spark: SparkSession, path: String,
-      index: Index, queries: DataFrame, nProbe: Int,
-      corpusFilter: Column): (DataFrame, DataFrame) = {
-    val probes = Ivf.probeRows(queries, index.coarse, nProbe)
-    val probedCids = probes.select(col("cid")).distinct()
-      .collect().map(_.getInt(0))
-    val coded = IndexMaintenance.filterTombstones(spark, path,
-      spark.read.parquet(path)
-        .where(col("cid").isin(probedCids.map(Int.box): _*))
-        .where(corpusFilter)
-        .select(col("id"), col("cid"), col("codes")))
-    (probes, coded)
   }
 
   /** Radius search on the COMPRESSED tier: every eligible code with
@@ -287,18 +189,23 @@ object IvfPq {
     * ESTIMATE, so the τ-cut is approximate in exactly the way the
     * FAISS IVFPQ range_search is: a coarse sweep whose survivors an
     * exact re-rank confirms (compose with `Similarity.rerankExact` as
-    * [[searchRerank]] does). Same pruning / tombstone / pre-filter
-    * semantics as [[searchPersisted]]; no ranking window — the cut
-    * fuses into the ADC projection. Output (qid, vec_id, score). */
+    * [[searchRerank]] does). The probed cluster ids become a static
+    * `cid IN (...)` partition filter, so the scan reads only the
+    * probed clusters' codes; no ranking window — the cut fuses into
+    * the ADC projection. Output (qid, vec_id, score). */
   def searchRadiusAt(spark: SparkSession, path: String,
       queries: DataFrame, minScore: Double, nProbe: Int = 2,
-      roundDigits: Int = 5, corpusFilter: Column = lit(true)): DataFrame = {
+      roundDigits: Int = 5): DataFrame = {
     val index = loadIndex(spark, path)
     if (index.coarse.isEmpty || index.codebooks.head.isEmpty)
       return emptyResult(queries).select(col("qid"), col("vec_id"),
         col("score"))
-    val (probes, coded) = probedCoded(spark, path, index, queries,
-      nProbe, corpusFilter)
+    val probes = Ivf.probeRows(queries, index.coarse, nProbe)
+    val probedCids = probes.select(col("cid")).distinct()
+      .collect().map(_.getInt(0))
+    val coded = spark.read.parquet(path)
+      .where(col("cid").isin(probedCids.map(Int.box): _*))
+      .select(col("id"), col("cid"), col("codes"))
     val q = probes.select(
       col("qid") +: col("cid") +:
         Pq.lutCols(col("qvec"), index.codebooks, index.dsub): _*)

@@ -41,10 +41,7 @@ import org.apache.spark.sql.functions._
   * and a per-container lookup prunes to one stride. The serving
   * joins are signature equi-joins that shuffle (model, 2×long) rows
   * — never blob bytes; at 100 TB the tables bucket by signature for
-  * co-located containment joins, and
-  * [[IndexMaintenance.compactPersisted]] collapses append growth
-  * (the layout is first-level `pb=` directories, which is exactly
-  * what it compacts). */
+  * co-located containment joins. */
 object MediaSignals {
 
   /** The pipeline constants the signals were derived under — ONE

@@ -26,10 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Typed media metadata carried beside the blob. */
-  val metadataCols: Seq[String] =
-    Seq("media_type", "width", "height", "duration_ms", "sample_rate")
-
   /** Little-endian integer read from a binary column as a pure
     * codegen expression chain: `substring` slices the bytes, `hex`
     * renders them in storage order, the per-byte hex pairs re-concat
@@ -64,10 +60,10 @@ object Multimodal {
     *    header-ONLY dimension probe via [[graft.functions.ImageIo]]
     *    (java.desktop ships the readers — no external media library;
     *    pixel data is never touched for metadata).
-    *  - Formats beyond ImageIO's set (audio/video containers): the
-    *    documented deterministic stub of [[withFakeMetadata]], so
-    *    mixed-media pipelines keep the same schema and the remaining
-    *    formats stay honestly stubbed.
+    *  - Formats beyond ImageIO's set (audio/video containers): a
+    *    documented deterministic stub derived from the content hash,
+    *    so mixed-media pipelines keep the same schema and the
+    *    remaining formats stay honestly stubbed.
     *
     * The probe is materialized into a helper column first so the
     * per-row ImageIO call runs ONCE, not once per referencing output
@@ -106,22 +102,6 @@ object Multimodal {
       .drop("_img_dims")
   }
 
-  /** Wrap a raw binary column with parsed header metadata.
-    * STUB: the fake derives deterministic dimensions from the content
-    * hash so tests are stable. [[withMetadata]] is the real-parse
-    * entry point (BMP + everything ImageIO reads parsed for real;
-    * only formats beyond ImageIO's set fall back here). */
-  def withFakeMetadata(df: DataFrame, bin: Column): DataFrame = {
-    val h = abs(xxhash64(bin))
-    df.withColumn("media_type",
-        element_at(array(lit("image"), lit("audio"), lit("video")),
-          (h % 3 + 1).cast("int")))
-      .withColumn("width", (h % 1920 + 1).cast("int"))
-      .withColumn("height", (h % 1080 + 1).cast("int"))
-      .withColumn("duration_ms", (h % 60000).cast("long"))
-      .withColumn("sample_rate", lit(16000))
-  }
-
   /** Feature extraction: binary → fixed-size float vector.
     * STUB: deterministic pseudo-features from content hashes (a real
     * impl runs a model over decoded frames — same signature). Pure
@@ -137,18 +117,6 @@ object Multimodal {
           1, 15), 16, 10).cast("long"),
         lit(1000000L)).cast("double") / 1e6)
     }: _*)
-
-  /** Resize: REAL for every container ImageIO reads — decode,
-    * bit-deterministic nearest-neighbor sample to (w, hgt), re-encode
-    * PNG ([[graft.functions.ImageIo.resize]]); bytes no reader
-    * recognizes pass through unchanged (the prior stub behavior, now
-    * the explicit non-image fallback so mixed-media frames keep the
-    * schema). Plan shape unchanged: a projection, no shuffle. */
-  def resize(df: DataFrame, bin: Column, w: Int, hgt: Int): DataFrame =
-    df.withColumn("resized",
-        coalesce(graft.functions.ImageIo.imageResize(bin, w, hgt), bin))
-      .withColumn("width", lit(w))
-      .withColumn("height", lit(hgt))
 
   /** STUB decoder: deterministic, ENGINE-PORTABLE pseudo-features —
     * dimension i is the md5-derived 60-bit hash of (hex(bytes), i)
@@ -169,41 +137,6 @@ object Multimodal {
           .map("%02x".format(_)).mkString.take(15), 16)
       ((h % 1000000L).toDouble / 1e6).toFloat
     }
-  }
-
-  /** REAL image decoder with the [[decodeEmbedBatched]] signature:
-    * ImageIO-decoded pixels → L1-normalized `dim`-bin grayscale
-    * histogram over an 8×8 sample grid (a real, deterministic,
-    * decode-backed feature — production swaps in a model session with
-    * the same signature). Bytes no installed reader recognizes fall
-    * back to [[stubDecode]], so mixed media batches keep the schema
-    * contract; decode failures never throw ([[graft.functions.ImageIo]]
-    * NULL contract → stub fallback). */
-  def imageIoDecode(bytes: Array[Byte], dim: Int): Array[Float] = {
-    // header-probe BEFORE the full decode: a decompression-bomb check
-    // that runs after ImageIO.read has already allocated the raster
-    // guards nothing (review finding, round 8) — refuse on the
-    // claimed dims first, exactly as ImageIo.aHash/toPng/resize do
-    val d = graft.functions.ImageIo.dims(bytes)
-    if (d == null || d(0) <= 0 || d(1) <= 0 ||
-      d(0).toLong * d(1) > graft.functions.ImageIo.MaxPixels)
-      return stubDecode(bytes, dim)
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null || img.getWidth <= 0 || img.getHeight <= 0)
-      return stubDecode(bytes, dim)
-    val grid = 8
-    val counts = new Array[Int](dim)
-    var i = 0
-    while (i < grid * grid) {
-      val rgb = img.getRGB((i % grid) * img.getWidth / grid,
-        (i / grid) * img.getHeight / grid)
-      val gray = ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-      counts(gray * dim / 766) += 1
-      i += 1
-    }
-    counts.map(c => c.toFloat / (grid * grid))
   }
 
   /** Batched per-partition decode → embedding — the Scala analog of

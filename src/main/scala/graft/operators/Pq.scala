@@ -267,8 +267,7 @@ object Pq {
     * sub-codebooks — the at-rest PQ layout, completing the persist/
     * load lifecycle symmetry with [[Ivf.persist]]/[[IvfPq.persist]]
     * (plain PQ has no cluster pruning, so the codes are one flat
-    * table; pair with [[IndexMaintenance.deletePersisted]] for
-    * tombstone deletes). */
+    * table). */
   def persist(index: Index, path: String): Unit = {
     index.coded.write.mode("overwrite").parquet(path)
     val spark = index.coded.sparkSession
@@ -282,7 +281,7 @@ object Pq {
 
   /** Rebuild an [[Index]] from a [[persist]]ed path: codebooks from
     * the sidecar (half-norms recomputed — derived data), `coded` read
-    * from parquet with tombstoned ids filtered out. */
+    * from parquet. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Index = {
     val rows = spark.read.parquet(Ivf.quantizerPath(path))
@@ -296,8 +295,7 @@ object Pq {
         .map { case (_, code, cv) => (code, cv, halfNormSq(cv)) }
         .sortBy(_._1)
     }
-    val coded = IndexMaintenance.filterTombstones(spark, path,
-      spark.read.parquet(path).select(col("id"), col("codes")))
+    val coded = spark.read.parquet(path).select(col("id"), col("codes"))
     Index(codebooks, coded, m, codebooks.head.head._2.length)
   }
 
@@ -305,21 +303,4 @@ object Pq {
   def searchAt(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, topK: Int, roundDigits: Int = 5): DataFrame =
     search(loadIndex(spark, path), queries, topK, roundDigits)
-
-  /** Append a new vector batch to a [[persist]]ed index WITHOUT
-    * retraining (FAISS `add`): one map-side scan encodes the batch
-    * with the existing codebooks and appends the codes as new files.
-    * Same contract as [[Ivf.appendPersisted]]/[[IvfPq.appendPersisted]]
-    * — disjoint ids, caller-provided exactly-once batching, rebuild on
-    * distribution drift, periodic [[IndexMaintenance.compactPersisted]]
-    * (flat layout) to collapse per-batch file growth. */
-  def appendPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVectors: DataFrame, idCol: Column,
-      vecCol: Column): Unit = {
-    val index = loadIndex(spark, path)
-    newVectors
-      .select(idCol.as("id"),
-        encodeExpr(vecCol, index.codebooks, index.dsub))
-      .write.mode("append").parquet(path)
-  }
 }

@@ -253,7 +253,7 @@ object Similarity {
     * over nBlocks·(nBlocks+1)/2 parallel tasks). No driver collect,
     * no broadcast of the corpus.
     *
-    * At 100 TB pre-filter with [[hyperplaneSignature]] buckets or
+    * At 100 TB pre-filter with [[hyperplaneSignatureFixed]] buckets or
     * [[graft.operators.Dedup.minhashCandidates]] and verify only
     * candidates; this operator is the exact ground truth. The
     * threshold applies to the rounded value so the cut is
@@ -350,14 +350,12 @@ object Similarity {
     java.lang.Long.parseLong(hex.take(15), 16)
   }
 
-  /** [[hyperplaneSignature]] for a known dimension: the ±1 hyperplane
-    * matrix is data-independent, so it is built once on the driver and
-    * the per-row work becomes `nBits` codegen'd native dot products
-    * against sign-vector literals — the HOF formulation below runs
-    * interpreted (~10× slower per the measured perf notes). Bit
-    * values agree with [[hyperplaneSignature]] exactly (spec-pinned):
-    * products x·(±1) are exact in double and accumulate in the same
-    * ascending-index order. */
+  /** `nBits`-bit random-hyperplane signature of a `dim`-dimensional
+    * vector: bit i = sign of the dot product with a deterministic
+    * pseudo-random ±1 hyperplane derived from portable hashes of
+    * (d, i). The ±1 matrix is data-independent, so it is built once
+    * on the driver and the per-row work becomes `nBits` codegen'd
+    * native dot products against sign-vector literals. */
   def hyperplaneSignatureFixed(vec: Column, nBits: Int, dim: Int): Column = {
     val bits = (0 until nBits).map { i =>
       val signs = Array.tabulate(dim)(d =>
@@ -366,56 +364,6 @@ object Similarity {
         .otherwise(0L)
     }
     bits.reduce(_ + _)
-  }
-
-  /** `nBits`-bit random-hyperplane signature of a vector: bit i = sign
-    * of the dot product with a deterministic pseudo-random ±1
-    * hyperplane derived from portable hashes of (i, dim). Dimension-
-    * generic (interpreted HOFs) — prefer [[hyperplaneSignatureFixed]]
-    * when the dimension is known. */
-  def hyperplaneSignature(vec: Column, nBits: Int): Column = {
-    val sigBits = (0 until nBits).map { i =>
-      val proj = aggregate(
-        zip_with(
-          transform(vec, _.cast("double")),
-          transform(sequence(lit(0), size(vec) - 1),
-            d => when(phash(d.cast("string"), i) % 2 === 0, 1.0d).otherwise(-1.0d)),
-          (x, s) => x * s),
-        lit(0.0d), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }
-    sigBits.reduce(_ + _)
-  }
-
-  /** ANN via hyperplane-LSH bucketing: compare only within signature
-    * buckets. Returns the same schema as [[bruteForceTopK]]; recall<1
-    * by construction. Pass `dim` to bucket via the codegen'd
-    * fixed-dimension signature. */
-  def lshTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-      nBits: Int = 12,
-      roundDigits: Int = 5,
-      dim: Option[Int] = None): DataFrame = {
-    def sig(c: Column) = dim match {
-      case Some(d) => hyperplaneSignatureFixed(c, nBits, d)
-      case None => hyperplaneSignature(c, nBits)
-    }
-    val qb = queries.withColumn("bucket", sig(col("qvec")))
-      .withColumn("qnorm", norm(col("qvec")))
-    val cb = corpus.withColumn("bucket", sig(col("embedding")))
-      .withColumn("vnorm", norm(col("embedding")))
-    val joined = cb.join(broadcast(qb), Seq("bucket"))
-      .where(col("qid") =!= col("vec_id"))
-    val sims = joined.select(
-      col("qid"), col("vec_id"),
-      round(cosineWithNorms(col("qvec"), col("embedding"),
-        col("qnorm"), col("vnorm")), roundDigits).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
   }
 
   /** Margin-based bitext mining (Artetxe & Schwenk 2019): for every
@@ -437,7 +385,7 @@ object Similarity {
     * Scale shape: the pair generation here is the brute-force kernel
     * (`left` broadcast — the query side is small by construction);
     * at corpus scale the SAME margin arithmetic consumes any
-    * candidate generator ([[lshTopK]], [[Ivf.search]]) since it only
+    * candidate generator ([[Ivf.search]]) since it only
     * needs each pair's fixed-point cosine and the per-side top-k
     * sums. Both windows partition on ONE key each and
     * WindowGroupLimit prunes them. */

@@ -13,9 +13,8 @@ import graft.functions.DotProductF
   * SQL functions, so plain-SQL users (thrift server, notebooks) call
   * `dot_product_f(a, b)` without any Scala registration step.
   *
-  * Everything injected here is also reachable without extensions
-  * (`DotProduct.register`) — the extension is the zero-code-change
-  * path, not the only path.
+  * Column API users reach the same expressions without extensions
+  * (`DotProduct.dotF`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -332,9 +332,9 @@ object DocQueries {
     // s12: RADIUS search on the same persisted index ([[Ivf
     // .searchRadiusAt]] — FAISS range_search: "everything within τ",
     // the dedup-against-index / recall-sweep companion to s2p's
-    // top-k). Same probed-cluster partition pruning and tombstone
-    // semantics; no ranking window at all — the τ-cut fuses into the
-    // scoring projection as a plain filter.
+    // top-k). Same probed-cluster partition pruning; no ranking
+    // window at all — the τ-cut fuses into the scoring projection as
+    // a plain filter.
     "s12_radius_search" -> ((s, dir) => {
       val e = emb(s, dir)
       val q = e.where(col("vec_id") < 10)
@@ -1958,8 +1958,8 @@ object DocQueries {
     // trigger is RELATIVE (drift > 1.25 × the cluster-median drift —
     // absolute drift shrinks as clusters fill, so a fixed cut is
     // scale-dependent; "worse than typical" is not). Completes the
-    // index lifecycle: build → persist → append → compact →
-    // tombstone → THIS (when to retrain) → rebuild.
+    // index lifecycle: build → persist → append → THIS (when to
+    // retrain) → reindex | rebuild.
     "s17_centroid_drift" -> ((s, dir) =>
       graft.operators.Ivf.centroidDrift(s, appendIndexPath(s, dir),
           medianMultiple = 1.25)
@@ -2069,7 +2069,7 @@ object DocQueries {
     // 11th re-crawled past max(doc_id). Scale shape: ONE full-outer
     // sort-merge join on doc_id — the comparison ships (id, 16-byte
     // md5, token count), never text; with both releases bucketed on
-    // doc_id (Sinks.writeBucketed) the diff plans with ZERO
+    // doc_id (`bucketBy` at write time) the diff plans with ZERO
     // exchanges.
     "p23_snapshot_diff" -> ((s, dir) => {
       val a = docs(s, dir).select(col("doc_id"), col("text"))

@@ -8,47 +8,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * The reference's write path is SQLAlchemy `add()` + 1 s commits into
   * Postgres with btree-DESC indexes and `CLUSTER ... ON flight_id`
-  * (`create_public_schema.sql:759-811`). The Spark equivalents:
-  * clustering = repartition-by-key + sortWithinPartitions on write;
-  * indexes = parquet min/max row-group statistics that Catalyst prunes
-  * on; the JDBC sink stays available for drop-in parity.
+  * (`create_public_schema.sql:759-811`). The live parquet writer,
+  * `AdsbStream.start`, partitions `positions` by (`day`, `batch_id`)
+  * and the other tables by `batch_id`; indexes = parquet min/max
+  * row-group statistics that Catalyst prunes on; no clustering,
+  * bucketing or Z-order writer exists. The JDBC sink stays available
+  * for drop-in parity.
   */
 object Sinks {
 
-  /** `CLUSTER positions ON flight_id` analog: co-locate each key's
-    * rows and sort by time within files so per-key scans are
-    * contiguous and min/max pruning is effective at 100 TB. */
-  def writeClustered(
-      df: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      sortCols: Seq[String],
-      partitions: Int,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.repartition(partitions, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ sortCols).map(col): _*)
-      .write.mode(mode).parquet(path)
-  }
-
-  /** Day-partitioned event table: partition pruning for the time-slice
-    * queries (P9/Q4/Q5). */
-  def writeDayPartitioned(df: DataFrame, path: String, timeCol: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    import org.apache.spark.sql.functions.{col, to_date}
-    df.withColumn("day", to_date(col(timeCol)))
-      .write.mode(mode).partitionBy("day").parquet(path)
-  }
-
-  /** Small-file compaction for streaming sinks. A 1 s-trigger
+  /** Small-file compaction: rewrite one directory into
+    * `ceil(rows/rowsPerFile)` right-sized files. A 1 s-trigger
     * micro-batch sink (the reference's commit cadence, S6/T11) writes
     * one file per partition per batch — ~86k tiny files/day/partition
     * at scale, which degrades scans (footer reads dominate) and
-    * listing. Rewrite a day partition into `ceil(rows/rowsPerFile)`
-    * right-sized files once the day is sealed; pair with
-    * `writeDayPartitioned` so compaction replaces exactly one
-    * partition directory atomically-enough for batch readers. */
-  /** Swap protocol: the full rewrite lands in a staging dir first, then
+    * listing.
+    *
+    * Swap protocol: the full rewrite lands in a staging dir first, then
     * two directory renames (metadata-only ops) swap it in — the data is
     * complete in either the staging or the live path at every instant,
     * and a mid-swap crash loses nothing (recover from `__compacting` /
@@ -63,7 +39,7 @@ object Sinks {
       rowsPerFile: Long,
       transform: DataFrame => DataFrame = identity): Unit = {
     // `transform` rewrites the directory's contents during compaction
-    // (e.g. graft.operators.IndexMaintenance purging tombstoned ids);
+    // (graft.operators.IndexMaintenance applying a reindex stage);
     // an all-rows-dropped result still writes one empty schema-bearing
     // file, so the directory never disappears from partition discovery
     val df = transform(spark.read.parquet(path))
@@ -126,46 +102,6 @@ object Sinks {
     } else
       throw new java.io.IOException(
         s"recoverCompact: nothing to recover at $base")
-  }
-
-  /** GiST-index analog for the positions table: cluster on the Z-order
-    * curve so each parquet file covers a tight lon/lat box and bbox
-    * queries prune on file min/max statistics
-    * (see [[graft.functions.ZOrder]]). Range-partitioning by z keeps
-    * the curve contiguous across files. */
-  def writeSpatialClustered(
-      df: DataFrame,
-      path: String,
-      lonCol: String,
-      latCol: String,
-      partitions: Int,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("__z", graft.functions.ZOrder.zValue(col(lonCol), col(latCol)))
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(mode).parquet(path)
-  }
-
-  /** Bucketed fact table: pre-shuffle on the join/aggregation key at
-    * write time so downstream fact-fact joins and per-key aggregations
-    * plan NO exchange at read time — the co-location strategy for
-    * repeatedly-joined 100 TB tables (`flights ⋈ positions ⋈ events`
-    * on flight_id). Both sides of a join must use the same bucket
-    * count. Bucketing lives in the table catalog, so this writes via
-    * `saveAsTable`, not a bare path. */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      buckets: Int,
-      sortCols: Seq[String] = Nil,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = df.write.mode(mode).format("parquet")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
   }
 
   /** S6: JDBC sink (`db.py:24-38`, `flights.py:119-131`). In streaming,

@@ -56,19 +56,4 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.getConf(org.apache.spark.sql.internal.SQLConf
         .ADVISORY_PARTITION_SIZE_IN_BYTES)
-
-  /** Register a 2-arg expression builder as a SQL function. */
-  def registerBinary(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: (Expression, Expression) => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name,
-        exprs => {
-          // explicit arity check: exprs(0)/exprs(1) would silently
-          // IGNORE extra arguments (wrong results, no warning) and
-          // throw a bare IndexOutOfBounds on too few
-          require(exprs.length == 2,
-            s"$name takes exactly 2 arguments, got ${exprs.length}")
-          builder(exprs(0), exprs(1))
-        }, "scala_udf")
 }

@@ -97,9 +97,9 @@ class MetaSpec extends SparkSpec {
   test("multimodal stubs are deterministic and schema-stable") {
     import graft.operators.Multimodal
     val bin = Meta.loadAircraftSilhouettes(spark, Meta.silhouettesDir())
-    val a = Multimodal.withFakeMetadata(bin, col("silhouette"))
+    val a = Multimodal.withMetadata(bin, col("silhouette"))
       .withColumn("e", Multimodal.fakeEmbedding(col("silhouette")))
-    val b = Multimodal.withFakeMetadata(bin, col("silhouette"))
+    val b = Multimodal.withMetadata(bin, col("silhouette"))
       .withColumn("e", Multimodal.fakeEmbedding(col("silhouette")))
     assert(a.select("model", "width", "height", "e").exceptAll(
       b.select("model", "width", "height", "e")).count() === 0)
@@ -158,7 +158,7 @@ class MetaSpec extends SparkSpec {
     import graft.operators.Multimodal
     val bin = Meta.loadAircraftSilhouettes(spark, Meta.silhouettesDir())
     val dir = java.nio.file.Files.createTempDirectory("mm-prune").toString
-    Multimodal.withFakeMetadata(bin, col("silhouette"))
+    Multimodal.withMetadata(bin, col("silhouette"))
       .write.mode("overwrite").parquet(dir)
     // a census over metadata must not read the binary column: at
     // 100 TB the blobs ARE the table, and reading them for a count

@@ -188,13 +188,4 @@ class ReplaySpec extends SparkSpec {
       ("KLM77", "KLM Royal Dutch Airlines", "NL"),
       ("KLM77", "KLM Royal Dutch Airlines", "NL")))
   }
-
-  test("arrival-order mode equals event-time replay on monotone capture") {
-    val arr = AdsbPipeline.process(
-      graft.adsb.Sbs.messages(
-        graft.adsb.Sbs.fixtureLines(spark, "adsb_message_stream.txt")),
-      arrivalOrder = true)
-    assert(arr.toDF().exceptAll(out.toDF()).count() === 0)
-    assert(out.toDF().exceptAll(arr.toDF()).count() === 0)
-  }
 }

@@ -54,14 +54,4 @@ class DotProductSpec extends SparkSpec {
       graft.operators.Similarity.dot(col("embedding"), col("embedding")).as("hof"))
     assert(both.where(col("native") =!= col("hof")).count() === 0)
   }
-
-  test("registered SQL function works") {
-    DotProduct.register(spark)
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .createOrReplaceTempView("emb_dp")
-    val r = spark.sql(
-      "SELECT vec_id, dot_product_f(embedding, embedding) AS n2 FROM emb_dp LIMIT 5")
-      .collect()
-    assert(r.forall(_.getDouble(1) > 0))
-  }
 }

@@ -133,20 +133,6 @@ class ImageIoSpec extends SparkSpec {
     assert(50000L * 50000 > ImageIo.MaxPixels)
     assert(ImageIo.aHash(bomb, 8) == null)
     assert(ImageIo.toPng(bomb) == null)
-    assert(ImageIo.resize(bomb, 8, 8) == null)
-    assert(Multimodal.imageIoDecode(bomb, 8).toSeq ===
-      Multimodal.stubDecode(bomb, 8).toSeq)
-  }
-
-  test("resize index math survives cap-passing degenerate-wide images") {
-    // 40000×1 passes MaxPixels; x·srcW in the sampling loop exceeds
-    // Int range for mid-size targets unless computed in Long
-    val wide = new BufferedImage(40000, 1, BufferedImage.TYPE_3BYTE_BGR)
-    for (x <- 0 until 40000 by 1000) wide.setRGB(x, 0, 0xffffff)
-    val bytes = encode(wide, "png")
-    val r = ImageIo.resize(bytes, 60000, 1) // 60000·40000 > 2^31
-    assert(r != null)
-    assert(ImageIo.dims(r).toSeq === Seq(60000, 1))
   }
 
   test("toPng transcode is pixel-lossless: hash invariant from any lossless source") {
@@ -160,43 +146,5 @@ class ImageIoSpec extends SparkSpec {
         s"$fmt->png transcode changed the perceptual hash")
     }
     assert(ImageIo.toPng(Array.fill[Byte](100)(3)) == null) // junk: NULL
-  }
-
-  test("resize is real, deterministic nearest-neighbor, format-agnostic") {
-    val img = testImage() // 64×48, left black / right white
-    for (fmt <- Seq("bmp", "png", "jpg")) {
-      val r = ImageIo.resize(encode(img, fmt), 16, 12)
-      assert(r != null, s"$fmt resize failed")
-      assert(ImageIo.dims(r).toSeq === Seq(16, 12))
-      // nearest-neighbor preserves the hard split exactly for the
-      // lossless sources: left half black, right half white
-      if (fmt != "jpg") {
-        val decoded = ImageIO.read(new java.io.ByteArrayInputStream(r))
-        assert((decoded.getRGB(3, 6) & 0xffffff) === 0x000000)
-        assert((decoded.getRGB(12, 6) & 0xffffff) === 0xffffff)
-      }
-      // bit-deterministic: same input → same bytes
-      assert(r.toSeq === ImageIo.resize(encode(img, fmt), 16, 12).toSeq)
-    }
-    assert(ImageIo.resize(encode(img, "png"), 0, 12) == null)
-    // the operator keeps non-image bytes unchanged (schema contract)
-    val junk = Array.fill[Byte](80)(0x2a)
-    val out = Multimodal.resize(
-        Seq(Tuple1(junk)).toDF("blob"), col("blob"), 16, 12)
-      .select(col("resized")).as[Array[Byte]].head()
-    assert(out.toSeq === junk.toSeq)
-  }
-
-  test("imageIoDecode yields a real decode-backed histogram feature") {
-    val img = testImage()
-    val feats = Multimodal.imageIoDecode(encode(img, "png"), 8)
-    // half the samples black (bin 0), half white (last bin)
-    assert(feats(0) === 0.5f)
-    assert(feats(7) === 0.5f)
-    assert(feats.slice(1, 7).forall(_ === 0.0f))
-    // non-image bytes fall back to the deterministic stub
-    val junk = Array.fill[Byte](64)(0x11)
-    assert(Multimodal.imageIoDecode(junk, 8).toSeq ===
-      Multimodal.stubDecode(junk, 8).toSeq)
   }
 }

@@ -128,7 +128,9 @@ class RiffFuzzSpec extends AnyFunSuite {
       Seq((-64, 64), (0, Int.MaxValue), (12, b.length),
           (rnd.nextInt(500) - 60, rnd.nextInt(500) - 60)).foreach {
         case (start, end) =>
-          val r = Riff.findAudsStrf(b, start, end)
+          // the audio stream-format lookup the AVI audio gate runs
+          val r = Riff.findStreamChunk(b, start, end,
+            Riff.pack4cc("auds"), Riff.pack4cc("strf"))
           if (r != -1L) {
             val off = (r >>> 32).toInt
             assert(off - 8 >= 0 && off <= b.length, s"off $off")

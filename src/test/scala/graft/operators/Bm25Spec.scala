@@ -7,10 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** BM25 lexical retrieval: scoring sanity against a hand-computed
-  * fixture, self-retrieval, the persist/load/append lifecycle
-  * (append ≡ full rebuild — there is no training, so growing an index
-  * must serve exactly what indexing everything at once serves), and
-  * tombstone deletes. */
+  * fixture, self-retrieval, and the persisted index served from its
+  * path (equal to the in-memory search, stride-pruned scan). */
 class Bm25Spec extends SparkSpec {
 
   import spark.implicits._
@@ -71,26 +69,6 @@ class Bm25Spec extends SparkSpec {
     assert(Bm25.searchAt(spark, dir, q, topK = 5).collect().toSeq === mem)
   }
 
-  test("append ≡ full rebuild, and stats genuinely refresh") {
-    val dir = Files.createTempDirectory("bm25-app").resolve("index").toString
-    val half = docs.where(col("doc_id") % 2 === 0)
-    Bm25.persist(Bm25.build(half, col("doc_id"), col("text")), dir)
-    Seq(1, 3).foreach { r =>
-      Bm25.appendPersisted(spark, dir,
-        docs.where(col("doc_id") % 4 === r), col("doc_id"), col("text"))
-    }
-    val q = queriesFrom(docs, 10)
-    val grown = Bm25.searchAt(spark, dir, q, topK = 5).collect().toSeq
-    val full = Bm25.search(
-      Bm25.build(docs, col("doc_id"), col("text")), q, topK = 5)
-      .collect().toSeq
-    assert(grown === full,
-      "appended index must serve exactly what a full rebuild serves")
-    // the sidecar's N followed the corpus growth
-    val meta = spark.read.parquet(Ivf.quantizerPath(dir))
-    assert(meta.select(col("n_docs")).head().getLong(0) === docs.count())
-  }
-
   test("searchAt scans only the strides the query terms hash into " +
       "(static partition filter, plan-pinned)") {
     val dir = Files.createTempDirectory("bm25-prune").resolve("index").toString
@@ -106,19 +84,5 @@ class Bm25Spec extends SparkSpec {
       .split(",").length
     assert(n < Bm25.Strides,
       s"expected a pruned stride set, got all $n of ${Bm25.Strides}")
-  }
-
-  test("tombstoned doc_ids never return; compaction purges them") {
-    val dir = Files.createTempDirectory("bm25-del").resolve("index").toString
-    Bm25.persist(Bm25.build(docs, col("doc_id"), col("text")), dir)
-    val q = queriesFrom(docs, 5)
-    val victim = Bm25.searchAt(spark, dir, q, topK = 1)
-      .head().getLong(1)
-    IndexMaintenance.deletePersisted(spark, dir, Seq(victim).toDF("id"))
-    val logical = Bm25.searchAt(spark, dir, q, topK = 5).collect().toSeq
-    assert(!logical.exists(_.getLong(1) == victim))
-    IndexMaintenance.compactPersisted(spark, dir, rowsPerFile = 1000000L)
-    assert(Bm25.searchAt(spark, dir, q, topK = 5).collect().toSeq
-      === logical)
   }
 }

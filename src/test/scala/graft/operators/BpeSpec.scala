@@ -5,10 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** Pins for the in-engine BPE trainer/encoder: the training argmax
+/** Pins for the in-engine BPE trainer: the training argmax
   * (count, then (a,b)-ascending tie-break), one-pass non-overlapping
-  * merge application, early stop, and encodeWords ≡ trained vocab on
-  * the training corpus. The gate oracle re-applies the dumped merges
+  * merge application and early stop. The gate oracle re-applies the dumped merges
   * independently; these specs pin the TRAINING side in closed form. */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
@@ -58,24 +57,6 @@ class BpeSpec extends SparkSpec {
     val m = Bpe.train(Seq("aaa aaa").toDF("text"), col("text"), nMerges = 1)
     assert(mergeRows(m) === Seq((1, "a", "a", 4L)))
     assert(vocabMap(m)("aaa") === Seq("aa", "a"))
-  }
-
-  test("encodeWords replays merges identically to the trained vocab") {
-    val m = model("ab ab cd abcd", "ab cd lone")
-    val merges = mergeRows(m).map { case (_, a, b, _) => (a, b) }
-    val enc = Bpe.encodeWords(m.vocab.select(col("word")), col("word"),
-        merges).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(enc === vocabMap(m))
-  }
-
-  test("encodeWords handles unseen words with the learned merges") {
-    val m = model("ab ab cd cd") // learns (a,b) then (c,d)
-    val merges = mergeRows(m).map { case (_, a, b, _) => (a, b) }
-    val enc = Bpe.encodeWords(Seq("abcdab", "x").toDF("w"), col("w"),
-        merges).collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(enc === Map("abcdab" -> Seq("ab", "cd", "ab"), "x" -> Seq("x")))
   }
 
   test("train matches a local reference BPE trainer on random corpora") {

@@ -4,12 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins incremental append to persisted ANN indexes: after
+/** Pins incremental append to a persisted IVF index: after
   * appendPersisted, the index serves the UNION — probing every
-  * cluster recovers exact brute force over old+new for IVF, the
-  * IVF-PQ coded table covers the union and self-queries retrieve
-  * appended vectors, and append cost never touches the already-
-  * indexed rows (the new files hold only the batch). */
+  * cluster recovers exact brute force over old+new — and append cost
+  * never touches the already-indexed rows (the new files hold only
+  * the batch). */
 class IndexAppendSpec extends SparkSpec {
 
   private lazy val emb =
@@ -53,30 +52,6 @@ class IndexAppendSpec extends SparkSpec {
       .where(col("id") % 2 === 0 && !col("f").isin(before.toSeq: _*))
       .count()
     assert(oldRowsInNewFiles === 0L)
-    spark.catalog.clearCache()
-  }
-
-  test("IVF-PQ: append covers the union and retrieves appended vectors") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq-append")
-      .resolve("idx").toString
-    val index = IvfPq.build(half(0), col("vec_id"), col("embedding"),
-      dim = 64, kCoarse = 8, m = 8, k = 16)
-    IvfPq.persist(index, path)
-    IvfPq.appendPersisted(spark, path, half(1), col("vec_id"),
-      col("embedding"))
-    assert(spark.read.parquet(path).count() === emb.count())
-    // query BY appended vectors' embeddings under FRESH qids (search
-    // excludes qid == id self-matches by design): each appended
-    // vector must surface in its own query's top-5, probing all
-    // clusters
-    val queries = emb.where(col("vec_id") % 2 === 1 && col("vec_id") < 20)
-      .select((col("vec_id") + 100000L).as("qid"),
-        col("embedding").as("qvec"))
-    val got = IvfPq.searchAt(spark, path, queries, topK = 5, nProbe = 8)
-    val selfHits = got
-      .where(col("qid") - 100000L === col("vec_id")).count()
-    assert(selfHits === queries.count(),
-      s"appended vectors not retrievable: $selfHits self-hits")
     spark.catalog.clearCache()
   }
 }

@@ -8,7 +8,7 @@ import graft.SparkSpec
   * (a) equivalence with standalone PQ when nothing is pruned,
   * (b) two-stage recall at the Pq.searchRerank level,
   * (c) the persisted pruned-scan plan shape (static `cid IN`), and
-  * (d) persisted ≡ in-memory parity. */
+  * (d) persisted ≡ in-memory parity (loadIndex, radius search). */
 class IvfPqSpec extends SparkSpec {
 
   private lazy val emb =
@@ -43,17 +43,6 @@ class IvfPqSpec extends SparkSpec {
     assert(hit / 50.0 >= 0.7, s"ivfpq rerank recall ${hit / 50.0}")
   }
 
-  test("persisted search returns exactly the in-memory results") {
-    val index = buildIndex()
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-persist")
-      .resolve("index").toString
-    IvfPq.persist(index, dir)
-    val mem = IvfPq.search(index, queries, topK = 5, nProbe = 3)
-    val disk = IvfPq.searchPersisted(spark, dir, index,
-      queries, topK = 5, nProbe = 3)
-    assert(disk.collect().toSeq === mem.collect().toSeq)
-  }
-
   test("searchAt serves the index from the path alone (sidecar quantizers)") {
     val index = buildIndex()
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-persist3")
@@ -62,7 +51,7 @@ class IvfPqSpec extends SparkSpec {
     val loaded = IvfPq.loadIndex(spark, dir)
     assert(loaded.m === index.m && loaded.dsub === index.dsub)
     val mem = IvfPq.search(index, queries, topK = 5, nProbe = 3)
-    val at = IvfPq.searchAt(spark, dir, queries, topK = 5, nProbe = 3)
+    val at = IvfPq.search(loaded, queries, topK = 5, nProbe = 3)
     assert(at.collect().toSeq === mem.collect().toSeq)
   }
 
@@ -74,7 +63,7 @@ class IvfPqSpec extends SparkSpec {
     val tau = 0.2d
     val radius = IvfPq.searchRadiusAt(spark, dir, queries,
       minScore = tau, nProbe = 3)
-    val all = IvfPq.searchAt(spark, dir, queries,
+    val all = IvfPq.search(index, queries,
         topK = emb.count().toInt, nProbe = 3)
       .where(col("score") >= tau)
       .select(col("qid"), col("vec_id"), col("score"))
@@ -91,8 +80,8 @@ class IvfPqSpec extends SparkSpec {
     IvfPq.persist(index, dir)
     // one query, nProbe=2: at most 2 of the 8 cluster directories scan
     val q1 = queries.where(col("qid") === 0)
-    val disk = IvfPq.searchPersisted(spark, dir, index,
-      q1, topK = 5, nProbe = 2)
+    val disk = IvfPq.searchRadiusAt(spark, dir, q1, minScore = 0.0,
+      nProbe = 2)
     val plan = disk.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), s"no partition filter:\n$plan")
     val inList = "PartitionFilters: \\[cid#\\d+ IN \\(([^)]*)\\)".r
@@ -106,33 +95,5 @@ class IvfPqSpec extends SparkSpec {
     val index = IvfPq.build(none, col("vec_id"), col("embedding"), dim = 64)
     assert(index.coded.count() === 0)
     assert(IvfPq.search(index, queries, topK = 5).count() === 0)
-  }
-
-  test("filtered compressed search: predicate respected, pushed, payload inert") {
-    val index = IvfPq.build(emb, col("vec_id"), col("embedding"),
-      dim = 64, kCoarse = 8, m = 8, k = 16)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-filtered")
-      .resolve("index").toString
-    IvfPq.persistWithPayload(index,
-      emb.select(col("vec_id").as("id"), col("label")), dir)
-    val filtered = IvfPq.searchAt(spark, dir, queries, topK = 5,
-      nProbe = 4, corpusFilter = col("label") < 3)
-    val bad = filtered
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .where(col("label") >= 3).count()
-    assert(bad === 0L)
-    assert(filtered.count() > 0L)
-    val plan = IvfPq.searchAt(spark, dir,
-      queries.where(col("qid") === 0), topK = 5, nProbe = 2,
-      corpusFilter = col("label") < 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LessThan(label,3)"),
-      s"label predicate not pushed:\n$plan")
-    // payload inert: unfiltered search over the payload index equals
-    // the in-memory ADC search (quantizers deterministic)
-    val unfiltered = IvfPq.searchAt(spark, dir, queries, topK = 5, nProbe = 4)
-    val mem = IvfPq.search(index, queries, topK = 5, nProbe = 4)
-    assert(unfiltered.collect().toSeq === mem.collect().toSeq)
-    index.coded.unpersist(blocking = false)
   }
 }

@@ -6,8 +6,8 @@ import graft.SparkSpec
 
 /** Lifecycle pins for the at-rest media signal store (round-15): the
   * oracle proves stored signals equal fresh derivation (mm22/mm23);
-  * these prove the store's CONTRACT — append ≡ rebuild bit-for-bit,
-  * loud validation, and compaction compatibility. */
+  * these prove the store's CONTRACT — append ≡ rebuild bit-for-bit
+  * and loud validation. */
 class MediaSignalsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,28 +72,5 @@ class MediaSignalsSpec extends SparkSpec {
     assert(e3.getMessage.contains("overlap"))
     // the failed appends must not have written anything
     assert(slurp(p)._1.map(_.head) === Set("a", "b"))
-  }
-
-  test("per-batch append growth compacts through IndexMaintenance") {
-    val p = tmp()
-    MediaSignals.build(spark, p, frames("a"), segs("a"))
-    ('b' to 'f').foreach(m =>
-      MediaSignals.append(spark, p, frames(m.toString),
-        segs(m.toString)))
-    val before = slurp(p)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
-    def nFiles(sub: String) = {
-      def walk(d: org.apache.hadoop.fs.Path): Int =
-        fs.listStatus(d).map(st =>
-          if (st.isDirectory) walk(st.getPath)
-          else if (st.getPath.getName.startsWith("part-")) 1 else 0).sum
-      walk(new org.apache.hadoop.fs.Path(s"$p/$sub"))
-    }
-    val grown = nFiles("frames")
-    IndexMaintenance.compactPersisted(spark, s"$p/frames", 1L << 20)
-    IndexMaintenance.compactPersisted(spark, s"$p/segs", 1L << 20)
-    assert(nFiles("frames") < grown, "compaction must collapse files")
-    assert(slurp(p) === before, "compaction must not change content")
   }
 }

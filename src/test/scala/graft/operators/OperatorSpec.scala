@@ -249,16 +249,6 @@ class OperatorSpec extends SparkSpec {
     assert(rep(1L)._1 === 2L)
   }
 
-  test("fixed-dim hyperplane signature equals the generic expression") {
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(50)
-    val both = emb.select(
-      Similarity.hyperplaneSignature(col("embedding"), 10).as("generic"),
-      Similarity.hyperplaneSignatureFixed(col("embedding"), 10, 64).as("fixed"))
-    assert(both.where(col("generic") =!= col("fixed")).count() === 0)
-  }
-
   test("LSH near-dup: subset of exact pairs; identical vectors found") {
     val corpus = Seq(
       (1L, Array.fill(8)(1.0f)),
@@ -290,8 +280,9 @@ class OperatorSpec extends SparkSpec {
       (1L, "a b c d e f"), (2L, "a b c d e f"))
       .toDF("doc_id", "text")
     val dupCands = Seq((1L, 2L), (1L, 2L)).toDF("id_a", "id_b")
-    val v = Dedup.jaccardVerify(docs, dupCands, col("doc_id"), col("text"),
-      n = 3, threshold = 0.5).collect()
+    val v = Dedup.jaccardVerifyFromShingles(
+      Dedup.shingleRows(docs, col("doc_id"), col("text"), n = 3),
+      dupCands, threshold = 0.5).collect()
     assert(v.length === 1)
     assert(v(0).getDouble(2) === 1.0) // not inflated past 1 by the dup
   }

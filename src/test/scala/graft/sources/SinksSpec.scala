@@ -7,105 +7,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.adsb.AdsbPipeline
 
-/** Sink-side physical design: clustered/day-partitioned writers and
-  * the S9 cross-store session copy. */
+/** Sink-side physical design: small-file compaction and its crash
+  * recovery, the S6 JDBC sink and the S9 cross-store session copy. */
 class SinksSpec extends SparkSpec {
 
   import spark.implicits._
-
-  test("writeClustered co-locates keys and sorts within files") {
-    val dir = Files.createTempDirectory("graft-clustered").toString
-    val df = Seq((1L, 3, "c"), (2L, 1, "a"), (1L, 1, "a"), (2L, 2, "b"),
-      (1L, 2, "b")).toDF("k", "t", "v")
-    Sinks.writeClustered(df, dir, Seq("k"), Seq("t"), partitions = 2)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === 5)
-    // within each physical file, rows are (k, t)-sorted
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(input_file_name())
-      .orderBy(monotonically_increasing_id())
-    val ordered = back
-      .withColumn("file", input_file_name())
-      .withColumn("prev_k", lag(col("k"), 1).over(w))
-      .withColumn("prev_t", lag(col("t"), 1).over(w))
-    val violations = ordered.where(col("prev_k").isNotNull &&
-      (col("prev_k") > col("k") ||
-        (col("prev_k") === col("k") && col("prev_t") > col("t"))))
-    assert(violations.count() === 0)
-  }
-
-  test("writeDayPartitioned produces day= partition dirs") {
-    val dir = Files.createTempDirectory("graft-daypart").toString
-    val df = Seq(
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
-      (2L, java.sql.Timestamp.valueOf("2024-01-02 10:00:00")))
-      .toDF("id", "ts")
-    Sinks.writeDayPartitioned(df, dir, "ts")
-    val dirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("day=")).map(_.getName).toSet
-    assert(dirs === Set("day=2024-01-01", "day=2024-01-02"))
-    // partition pruning: reading one day touches one partition
-    val one = spark.read.parquet(dir).where(col("day") === "2024-01-01")
-    assert(one.count() === 1)
-  }
-
-  test("bucketed tables join and aggregate with no exchange") {
-    val flights = Seq((1L, "ABC"), (2L, "DEF"), (3L, "GHI"))
-      .toDF("flight_id", "callsign")
-    val positions = Seq((1L, 10.0), (1L, 11.0), (2L, 12.0), (3L, 13.0))
-      .toDF("flight_id", "alt")
-    Sinks.writeBucketed(flights, "b_flights", Seq("flight_id"), buckets = 4)
-    Sinks.writeBucketed(positions, "b_positions", Seq("flight_id"),
-      buckets = 4, sortCols = Seq("flight_id"))
-    // force the shuffle-join path (broadcast would trivially hide the
-    // exchange) and a static plan string
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val joined = spark.table("b_positions")
-        .join(spark.table("b_flights"), "flight_id")
-      val jp = joined.queryExecution.executedPlan.toString
-      assert(!jp.contains("Exchange"), jp)
-      assert(joined.count() === 4)
-
-      val agg = spark.table("b_positions")
-        .groupBy("flight_id").agg(max(col("alt")).as("max_alt"))
-      val ap = agg.queryExecution.executedPlan.toString
-      assert(!ap.contains("Exchange"), ap)
-      assert(agg.count() === 3)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.sql("DROP TABLE IF EXISTS b_flights")
-      spark.sql("DROP TABLE IF EXISTS b_positions")
-    }
-  }
-
-  test("content-hash-bucketed corpus dedups with no exchange") {
-    // d1-at-rest: a corpus bucketed by text_hash pre-shuffles the
-    // exact-dedup key, so the canonical-id aggregation (and the
-    // incremental-ingest anti join on the same key) runs with zero
-    // exchanges — at 100 TB that is the dedup shuffle, gone.
-    val docs = Seq((1L, "aa"), (2L, "bb"), (3L, "aa"), (4L, "cc"))
-      .toDF("doc_id", "text")
-      .withColumn("text_hash", md5(col("text")))
-    Sinks.writeBucketed(docs, "b_docs", Seq("text_hash"), buckets = 4)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val agg = spark.table("b_docs").groupBy("text_hash")
-        .agg(min(col("doc_id")).as("canonical_id"),
-          count(lit(1)).as("n_copies"))
-      val p = agg.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"), p)
-      val rows = agg.collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-      assert(rows === Map(1L -> 2L, 2L -> 1L, 4L -> 1L))
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.sql("DROP TABLE IF EXISTS b_docs")
-    }
-  }
 
   test("compact rewrites a fragmented sink into right-sized files") {
     val dir = Files.createTempDirectory("graft-compact").toString

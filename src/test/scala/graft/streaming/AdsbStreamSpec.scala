@@ -327,6 +327,32 @@ class AdsbStreamSpec extends SparkSpec {
       causes)
   }
 
+  test("supervise gives up after `attempts` starts and rethrows the failure") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    val stream = MemoryStream[Int]
+    stream.addData(1 to 10)
+    val ckpt = Files.createTempDirectory("graft-supervise-out").toString
+    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fail: (org.apache.spark.sql.Dataset[Int], Long) => Unit =
+      (_, _) => throw new IllegalStateException("injected permanent failure")
+    val e = intercept[StreamingQueryException] {
+      AdsbStream.supervise(attempts = 3, backoffMs = 10) { () =>
+        starts.incrementAndGet()
+        stream.toDS().writeStream
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch(fail)
+          .start()
+      }
+    }
+    assert(starts.get() === 3)
+    val root =
+      org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+    assert(root.isInstanceOf[IllegalStateException], root)
+    assert(root.getMessage === "injected permanent failure")
+  }
+
   test("ingest with dedupReplays collapses a full socket re-delivery") {
     implicit val sqlCtx = spark.sqlContext
     val lines = MemoryStream[String]
@@ -511,13 +537,15 @@ class AdsbStreamSpec extends SparkSpec {
   }
 
   test("sessionizer state survives on the RocksDB state store") {
-    // the conf-gated 100 TB state backend: the same batch ≡ stream
-    // replay, with the sessionizer's keyed state in RocksDB instead
-    // of the executor heap
+    // Spark's RocksDB provider, set on the session's conf: the same
+    // batch ≡ stream replay, with the sessionizer's keyed state in
+    // RocksDB instead of the executor heap
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass")
-    AdsbStream.useRocksDbStateStore(spark)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
     try {
       val msgs = Sbs.messages(
         Sbs.fixtureLines(spark, "adsb_message_stream.txt"))

@@ -30,7 +30,9 @@ class StreamingSoakSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass")
-    AdsbStream.useRocksDbStateStore(spark)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
