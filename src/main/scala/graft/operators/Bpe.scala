@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** BPE tokenizer training (Sennrich et al. 2016): count every
   * adjacent symbol pair across the corpus weighted by word frequency,
@@ -80,7 +81,7 @@ object Bpe {
         learned += ((learned.size + 1, a, b, n))
         val next = seg.select(col("word"), col("freq"),
           applyMerge(col("toks"), a, b).as("toks")).localCheckpoint()
-        seg.unpersist(blocking = false)
+        Bridge.unpersistCheckpoint(seg)
         seg = next
       }
     }

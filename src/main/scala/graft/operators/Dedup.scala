@@ -23,37 +23,19 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object Dedup {
 
-  /** Intra-query materialization of a frame consumed by several plan
-    * branches (the hashed-shingle table feeding sizes + both self-join
-    * sides). Modes, via `-Dgraft.share.mode`:
-    *  - `checkpoint` — lazy `localCheckpoint`: blocks self-reclaim via
-    *    the ContextCleaner when the query's references drop, so a
-    *    resident service composing these never accumulates
-    *    cache-catalog entries (round-5 verdict ask #6). Cost: the
-    *    checkpoint materialization showed up as +1.5-1.8 s on the
-    *    d3v/p7 gate queries (round-6 verdict #3). Lineage truncation
-    *    also means an executor loss MID-QUERY fails that query.
-    *  - `cache` (default) — plain `persist`: pipeline-friendly and
-    *    loss-tolerant (lineage recomputes), but the entry stays in the
-    *    cache catalog until `clearCache()`/`unpersist` — the gate
-    *    harness clears per query; a resident service should run the
-    *    checkpoint mode or clear explicitly.
-    * Measured at sf0.1 (local[32], min-of-2, round 7):
-    * d3v 1.00 s cache / 1.47 checkpoint; p7 1.46 / 1.88;
-    * d9 1.55 / 2.04 — cache is the default (d3v/p7 back under their
-    * round-5 cache-era mins; the round-6 checkpoint swap cost +45-30%
-    * on these, VERDICT r6 #3), the harness clears per query, and
-    * `checkpoint` remains the documented resident-service mode. */
+  /** The one way to hold a frame inside a query: a frame consumed by
+    * several plan branches (the hashed-shingle table feeding sizes +
+    * both self-join sides, an index's inverted lists) materializes
+    * once as a lazy local checkpoint. Its blocks belong to the
+    * checkpoint RDD, not to the SQL cache catalog, so nothing needs
+    * releasing: the ContextCleaner reclaims them once the query's
+    * references drop, and a resident session's cache catalog stays
+    * empty. Defining it already runs the frame's shuffle stages
+    * (AQE plans the frame to build the RDD); the stage after the last
+    * shuffle runs with the first action that reads it. Lineage is
+    * truncated, so losing an executor mid-query fails that query. */
   private[graft] def share(df: DataFrame): DataFrame =
-    sys.props.getOrElse("graft.share.mode", "cache") match {
-      case "checkpoint" => df.localCheckpoint(false)
-      case "cache" => df.persist()
-      // fail loudly: a typo'd mode silently falling back to cache
-      // would reintroduce exactly the cache-catalog accumulation the
-      // checkpoint mode exists to prevent in resident services
-      case other => throw new IllegalArgumentException(
-        s"unknown share mode '$other' (cache | checkpoint)")
-    }
+    df.localCheckpoint(false)
 
   /** maintenance.sql keep-one-per-group: keeps the first row of each
     * key group under `orderBy` (e.g. id desc = keep max id). */
@@ -133,8 +115,8 @@ object Dedup {
     * two hash joins), not the all-pairs quadratic of [[jaccardPairs]].
     * Semantics are identical to [[jaccardPairs]] restricted to
     * `candidates` (id_a < id_b assumed, as the candidate stage
-    * emits). Takes a prebuilt (id, sh) shingle table — cache and
-    * share it with [[minhashCandidatesFromShingles]] so the candidate
+    * emits). Takes a prebuilt (id, sh) shingle table — [[share]] it
+    * with [[minhashCandidatesFromShingles]] so the candidate
     * and verify stages scan/shingle the corpus once, not twice (the
     * shingle explode is the dominant scan at scale). */
   def jaccardVerifyFromShingles(

@@ -40,7 +40,7 @@ object Drift {
     * places. Slices with a distribution identical to the corpus score
     * ~0; higher = more divergent. */
   def unigramKl(docs: DataFrame, sliceCol: Column, textCol: Column): DataFrame = {
-    // materialized once (Dedup.share, mode-gated): four consumers
+    // materialized once (Dedup.share): four consumers
     // (scoring join, slice totals, corpus counts, corpus total) would
     // otherwise each replay the scan + token explode + first shuffle —
     // AQE's exchange reuse only catches the bit-identical subtrees

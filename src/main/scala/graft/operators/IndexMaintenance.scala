@@ -422,7 +422,6 @@ object IndexMaintenance {
         .agg(count(lit(1)).as("n"), sum(col("id")).as("sid")).collect()
         .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     val snapStats = statsOf(idx.assigned)
-    idx.assigned.unpersist(blocking = false)
     onShadowBuilt()
     // catch-up: appends that landed during the build, assigned with
     // the NEW quantizer; per-round stats stay k-bounded driver state

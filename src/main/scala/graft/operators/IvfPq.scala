@@ -37,7 +37,7 @@ object IvfPq {
 
   /** `coarse` is the coarse quantizer (cid, centroid, norm);
     * `codebooks(j)` the residual-free PQ codewords of subspace j;
-    * `coded` = (id, cid, codes) — the inverted lists, cached. */
+    * `coded` = (id, cid, codes) — the inverted lists, shared. */
   final case class Index(
       coarse: Array[(Int, Array[Float], Double)],
       codebooks: IndexedSeq[Array[(Int, Array[Float], Double)]],
@@ -46,8 +46,8 @@ object IvfPq {
       dsub: Int)
 
   /** Build coarse quantizer + PQ codebooks, then assign AND encode the
-    * full corpus in a single map-side projection over [[Ivf.build]]'s
-    * cached assignment (which itself is one scan). Both trainings run
+    * full corpus in a single map-side projection (one scan), held for
+    * the searches through [[Dedup.share]]. Both trainings run
     * on bounded deterministic samples — no full-corpus scan in either
     * Lloyd loop. */
   def build(corpus: DataFrame, idCol: Column, vecCol: Column,
@@ -58,21 +58,17 @@ object IvfPq {
     val ivf = Ivf.build(corpus, idCol, vecCol, kCoarse, iters, trainSampleCap)
     val vectors = corpus.select(idCol.cast("long").as("id"), vecCol.as("vec"))
     val codebooks = Pq.trainCodebooks(vectors, dim, m, k, iters, trainSampleCap)
+    // encode straight off the raw assignment, not off ivf.assigned:
+    // the index holds only the codes, never a second, full-vector copy
+    val assigned =
+      Ivf.assign(corpus.select(idCol.as("id"), vecCol.as("vec")), ivf.codebook)
     val coded =
       if (codebooks.head.isEmpty)
-        ivf.assigned.where(lit(false)).select(col("id"), col("cid"),
+        assigned.where(lit(false)).select(col("id"), col("cid"),
           array().cast("array<int>").as("codes"))
-      else ivf.assigned.select(col("id"), col("cid"),
+      else assigned.select(col("id"), col("cid"),
         Pq.encodeExpr(col("vec"), codebooks, dsub))
-    val cached = coded.cache()
-    // materialize the codes, then drop the full float-vector
-    // assignment cache Ivf.build left behind: IvfPq only ever needs
-    // `coded`, and the assignment entry (id + full vectors) would
-    // otherwise stay pinned for the session with no handle to
-    // release it
-    cached.count()
-    ivf.assigned.unpersist(blocking = false)
-    Index(ivf.codebook, codebooks, cached, m, dsub)
+    Index(ivf.codebook, codebooks, Dedup.share(coded), m, dsub)
   }
 
   private def emptyResult(queries: DataFrame): DataFrame =

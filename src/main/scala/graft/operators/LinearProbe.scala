@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.DotProduct.dotF
 
@@ -61,7 +62,7 @@ object LinearProbe {
         w(i) + step * grads.getOrElse(i, 0L) / 1000000.0d / n
       }.toArray
     }
-    base.unpersist(blocking = false)
+    Bridge.unpersistCheckpoint(base)
     w
   }
 

@@ -88,30 +88,25 @@ object NearDupIndex {
         s"near-dup index append at $path: batch ids overlap ids " +
           "already in the index (callers must re-idify)")
     } else Sidecar.write(spark, path, params(n, numHashes, bands))
-    val sh = Dedup.shingleRows(docs, idCol, textCol, n).cache()
-    try {
-      // repartition by the partition column before each partitionBy
-      // write: otherwise every task writes a sliver into every
-      // directory (tasks × dirs tiny files — measured 2× slower end
-      // to end at sf0.1 and a metadata bomb at scale). One file per
-      // directory here; at 100 TB add maxRecordsPerFile to split fat
-      // partitions while keeping the per-directory locality.
-      Dedup.bandedBuckets(sh, numHashes, bands)
-        .repartition(col("band"))
-        .write.mode(mode).partitionBy("band")
-        .parquet(s"$path/buckets")
-      val hashed = sh.select(col("id"), phash(col("sh"), 0).as("h"))
-        .distinct()
-        .cache()
-      try {
-        hashed.withColumn("pb", pb(col("id")))
-          .repartition(col("pb"))
-          .write.mode(mode).partitionBy("pb")
-          .parquet(s"$path/shingles")
-        hashed.groupBy("id").agg(count(lit(1)).as("n_sh"))
-          .write.mode(mode).parquet(s"$path/sizes")
-      } finally hashed.unpersist(blocking = false)
-    } finally sh.unpersist(blocking = false)
+    val sh = Dedup.share(Dedup.shingleRows(docs, idCol, textCol, n))
+    // repartition by the partition column before each partitionBy
+    // write: otherwise every task writes a sliver into every
+    // directory (tasks × dirs tiny files — measured 2× slower end
+    // to end at sf0.1 and a metadata bomb at scale). One file per
+    // directory here; at 100 TB add maxRecordsPerFile to split fat
+    // partitions while keeping the per-directory locality.
+    Dedup.bandedBuckets(sh, numHashes, bands)
+      .repartition(col("band"))
+      .write.mode(mode).partitionBy("band")
+      .parquet(s"$path/buckets")
+    val hashed = Dedup.share(
+      sh.select(col("id"), phash(col("sh"), 0).as("h")).distinct())
+    hashed.withColumn("pb", pb(col("id")))
+      .repartition(col("pb"))
+      .write.mode(mode).partitionBy("pb")
+      .parquet(s"$path/shingles")
+    hashed.groupBy("id").agg(count(lit(1)).as("n_sh"))
+      .write.mode(mode).parquet(s"$path/sizes")
   }
 
   /** Match a new batch against a persisted index: banded bucket

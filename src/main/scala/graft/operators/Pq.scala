@@ -151,7 +151,7 @@ object Pq {
         vectors.where(lit(false))
           .select(col("id"), array().cast("array<int>").as("codes"))
       else vectors.select(col("id"), encodeExpr(col("vec"), codebooks, dsub))
-    Index(codebooks, coded.cache(), m, dsub)
+    Index(codebooks, Dedup.share(coded), m, dsub)
   }
 
   /** The m-codes array expression for one vector — a pure map-side

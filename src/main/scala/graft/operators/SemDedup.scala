@@ -27,8 +27,8 @@ import graft.functions.DotProduct.dotF
   * [[Similarity.embeddingNearDupPairsByKey]] triangle-blocked kernel
   * instead — per-task memory stays 2·|cluster|/nBlocks vectors, so
   * semantic dedup still happens exactly where the quadratic
-  * self-join would have blown up. Norms are computed once per row
-  * BEFORE the self-join, not once per pair.
+  * self-join would have blown up. Norms are computed per row on each
+  * side BEFORE the self-join, not once per pair.
   */
 object SemDedup {
 
@@ -37,12 +37,9 @@ object SemDedup {
     * Lloyd rounds, decimal means), and the keep rule is pure id
     * arithmetic.
     *
-    * The corpus assignment materializes once as a lazy local
-    * checkpoint (three consumers: both self-join sides and the output
-    * spine); [[Ivf.build]]'s cache entry is released immediately, so
-    * no storage outlives the query's references — a long-running
-    * service composing reports never accumulates cache-catalog
-    * entries (round-5 verdict ask #6).
+    * The corpus assignment materializes once, through
+    * [[Ivf.build]]'s [[Dedup.share]], for its four consumers: the
+    * cluster sizes, both self-join sides and the output spine.
     *
     * `maxClusterSize` is the d4v mega-bucket guard with a working
     * fallback (round-5 verdict ask #3): a degenerate quantizer (or
@@ -63,11 +60,6 @@ object SemDedup {
       kClusters, iters, trainSampleCap)
     val rows = ivf.assigned
       .withColumn("nv", sqrt(dotF(col("vec"), col("vec"))))
-      .localCheckpoint(false)
-    // release the build's cache entry now: `rows` re-derives the
-    // assignment (one map-side scan) on its first materialization and
-    // its blocks self-reclaim via the ContextCleaner
-    ivf.assigned.unpersist(blocking = false)
     val sizes = rows.groupBy(col("cid"))
       .agg(count(lit(1)).as("_sz"))
     val small = sizes.where(col("_sz") <= maxClusterSize).select(col("cid"))

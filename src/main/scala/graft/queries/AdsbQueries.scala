@@ -27,7 +27,7 @@ import graft.operators.{Histogram, Multimodal}
   */
 object AdsbQueries {
 
-  // One analyzed replay per session and fixture, never `.cache()`d:
+  // One analyzed replay per session and fixture, never cached:
   // reused without re-reading the fixture, and no SQL-cache entry.
   private def replay(s: SparkSession, fixture: String): Dataset[Out] =
     graft.Memo(s, s"adsb|$fixture")(AdsbPipeline.replayFixture(s, fixture))

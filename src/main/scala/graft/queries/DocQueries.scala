@@ -76,9 +76,8 @@ object DocQueries {
     * p8), so n/bands/threshold can never drift between a proven
     * stage and the composites built on it. */
   private def verifiedPairs(d: DataFrame): DataFrame = {
-    // shared via Dedup.share (mode-gated cache/checkpoint — see
-    // its scaladoc for the measured trade): the shingle scan feeds
-    // both the candidate and the verify stage exactly once
+    // shared via Dedup.share: the shingle scan feeds both the
+    // candidate and the verify stage exactly once
     val sh = Dedup.share(
       Dedup.shingleRows(d, col("doc_id"), col("text"), n = 3))
     Dedup.jaccardVerifyFromShingles(sh,
@@ -530,11 +529,10 @@ object DocQueries {
     // (equality with p4 also spec-pinned in BloomSpec).
     "p4b_contamination_bloom" -> ((s, dir) => {
       val withSplit = contaminationSplit(s, dir)
-      // localCheckpointed: the sketch aggregation materializes it,
-      // the semi-join confirm reuses it, and the blocks self-reclaim
-      // (no cache entry outliving the query)
-      val trainHashes = withSplit.where(col("split") === "train")
-        .select(col("h")).distinct().localCheckpoint(false)
+      // shared: the sketch aggregation materializes it and the
+      // semi-join confirm reuses it
+      val trainHashes = Dedup.share(withSplit.where(col("split") === "train")
+        .select(col("h")).distinct())
       // sized for the sf0.1 train-hash set (~50k keys): 128 KiB of
       // bits → fpp ~2e-4, and the plan literal stays small. At real
       // scale, size numBits to the key-set estimate — the confirm
@@ -560,8 +558,8 @@ object DocQueries {
     "p4c_contamination_portable" -> ((s, dir) => {
       import graft.operators.Bloom
       val withSplit = contaminationSplit(s, dir)
-      val trainHashes = withSplit.where(col("split") === "train")
-        .select(col("h")).distinct().localCheckpoint(false)
+      val trainHashes = Dedup.share(withSplit.where(col("split") === "train")
+        .select(col("h")).distinct())
       // m = 2^20 bits (16 KiB packed) on ~50k keys at the sf0.1
       // gate: ~10% load, fp ≈ 1% — the confirm join keeps the output
       // exact at ANY fp rate, m only tunes how much the shuffle sees.
@@ -1293,17 +1291,14 @@ object DocQueries {
       // filter+dedup subtree (LSH verify included) re-executes per
       // consumer. At 100 TB the equivalent is materializing each
       // stage to parquet between jobs, which a real pipeline does
-      // anyway. Lazy localCheckpoint (not cache) so the blocks
-      // self-reclaim after the query's references drop.
-      val survivors = d
+      // anyway.
+      val survivors = Dedup.share(d
         .join(gopherKeep, Seq("doc_id"), "left_semi")
         .join(repKeep, Seq("doc_id"), "left_semi")
         .join(canon, Seq("doc_id"), "left_semi")
-        .join(nearLosers, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
-      val mixed = mixtureSample(s, survivors)
-        .select(col("doc_id"), col("lang"), col("text"))
-        .localCheckpoint(false)
+        .join(nearLosers, Seq("doc_id"), "left_anti"))
+      val mixed = Dedup.share(mixtureSample(s, survivors)
+        .select(col("doc_id"), col("lang"), col("text")))
       Pack.packReport(mixed, col("doc_id"),
           size(split(col("text"), " ")), budget = 512L)
         .withColumnRenamed("id", "doc_id")
@@ -1984,7 +1979,6 @@ object DocQueries {
         val index = Ivf.build(e.where(col("vec_id") % 2 === 0),
           col("vec_id"), col("embedding"), k = 16)
         Ivf.persist(index, p)
-        index.assigned.unpersist(blocking = false)
         Ivf.appendPersisted(s, p, e.where(col("vec_id") % 2 === 1),
           col("vec_id"), col("embedding"))
         graft.operators.IndexMaintenance.reindexFlagged(s, p,
@@ -3278,7 +3272,6 @@ object DocQueries {
       val index = Ivf.build(emb(s, dir), col("vec_id"), col("embedding"),
         k = 16)
       Ivf.persist(index, p)
-      index.assigned.unpersist(blocking = false)
     }
 
   /** The memoized persisted plain-PQ index (s4/s5's). */
@@ -3287,7 +3280,6 @@ object DocQueries {
       val index = Pq.build(emb(s, dir), col("vec_id"), col("embedding"),
         dim = 64, m = 16, k = 16, iters = 3)
       Pq.persist(index, p)
-      index.coded.unpersist(blocking = false)
     }
 
   /** The memoized persisted IVF-PQ index (s6's). */
@@ -3296,7 +3288,6 @@ object DocQueries {
       val index = IvfPq.build(emb(s, dir), col("vec_id"), col("embedding"),
         dim = 64, kCoarse = 16, m = 16, k = 16, iters = 3)
       IvfPq.persist(index, p)
-      index.coded.unpersist(blocking = false)
     }
 
   /** The memoized trained BPE model (t15's): 30 merges trained on the
@@ -3306,7 +3297,7 @@ object DocQueries {
       val m = Bpe.train(docs(s, dir), col("text"), nMerges = 30)
       m.merges.coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
       m.vocab.coalesce(1).write.mode("overwrite").parquet(s"$p/vocab")
-      m.vocab.unpersist(blocking = false)
+      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(m.vocab)
     }
 
   /** The memoized trained logistic-regression probe (p20's): 15
@@ -3331,7 +3322,6 @@ object DocQueries {
       val index = Ivf.build(e, col("vec_id"), col("embedding"), k = 16)
       Ivf.persistWithPayload(index,
         e.select(col("vec_id").as("id"), col("label")), p)
-      index.assigned.unpersist(blocking = false)
     }
 
   /** The memoized half-built-half-appended index (s2a's lifecycle). */
@@ -3341,7 +3331,6 @@ object DocQueries {
       val index = Ivf.build(e.where(col("vec_id") % 2 === 0),
         col("vec_id"), col("embedding"), k = 16)
       Ivf.persist(index, p)
-      index.assigned.unpersist(blocking = false)
       Ivf.appendPersisted(s, p, e.where(col("vec_id") % 2 === 1),
         col("vec_id"), col("embedding"))
     }
@@ -3361,7 +3350,6 @@ object DocQueries {
       val index = Ivf.build(e.where(col("vec_id") % 2 === 0),
         col("vec_id"), col("embedding"), k = 16)
       Ivf.persist(index, p)
-      index.assigned.unpersist(blocking = false)
       Ivf.appendPersisted(s, p, e.where(col("vec_id") % 2 === 1),
         col("vec_id"), col("embedding"))
       val mx = e.agg(max(col("vec_id")).as("m")).head().getLong(0) + 1

@@ -36,6 +36,11 @@ object Bridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(false))
 
+  /** Entries in the session's SQL cache catalog (the count is
+    * `private[sql]`). */
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
+
   /** Total stored bytes of an eagerly `localCheckpoint`ed frame's
     * blocks (memory + disk), read from the block manager's storage
     * status — a MEASUREMENT of the frame's size, available without

@@ -51,8 +51,8 @@ class AnalysisSmokeSpec extends SparkSpec {
     // share() or grown a new multi-consumer branch — fix the plan or
     // consciously raise the bound with a comment. Counted on the
     // pre-AQE physical plan (AQE's runtime dedup is partial, which
-    // is the point); cached subtrees are excluded because
-    // InMemoryTableScan has no scan children in this walk.
+    // is the point); shared subtrees are excluded because a local
+    // checkpoint plans as an RDD scan, which has no scan children.
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val dir = "/root/testdata/sf0.001"

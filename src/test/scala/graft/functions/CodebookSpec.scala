@@ -108,7 +108,6 @@ class CodebookSpec extends SparkSpec {
         col("vec").as("qvec"))
       val out = Pq.search(idx, queries, topK = 5)
       assert(out.count() === 15)
-      idx.coded.unpersist(blocking = false)
     } finally {
       spark.conf.unset("spark.sql.codegen.fallback")
       spark.catalog.clearCache()
@@ -129,7 +128,6 @@ class CodebookSpec extends SparkSpec {
       val out = graft.operators.Ivf.search(idx, queries, topK = 5,
         nProbe = 8)
       assert(out.groupBy(col("qid")).count().count() === 3)
-      idx.assigned.unpersist(blocking = false)
     } finally {
       spark.conf.unset("spark.sql.codegen.fallback")
       spark.catalog.clearCache()

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Round-10 (ADVICE r9): iterative operators must reclaim superseded
@@ -50,5 +51,21 @@ class CheckpointReclaimSpec extends SparkSpec {
     val nodes = (0L until 30L).toDF("id")
     val edges = ring(30).select(col("id_a").as("src"), col("id_b").as("dst"))
     assert(leakedAfter(PageRank.ranksPpm(nodes, edges, 5)) <= 1)
+  }
+
+  test("Bpe.train leaves blocks only for the returned vocab") {
+    // Dataset.unpersist drops SQL-cache entries only: each superseded
+    // segmentation round must go through Bridge.unpersistCheckpoint
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.map(_.id).toSet
+    val docs = Seq("abcdef abcdef abcdef", "abcdef abcd abcd ab ab")
+      .toDF("text")
+    val m = Bpe.train(docs, col("text"), nMerges = 5)
+    assert(m.merges.count() === 5)
+    val vocab = m.vocab.queryExecution.analyzed.collect {
+      case l: LogicalRDD => l.rdd.id
+    }.toSet
+    assert(vocab.nonEmpty)
+    assert(sc.getRDDStorageInfo.map(_.id).toSet -- before === vocab)
   }
 }

@@ -329,7 +329,6 @@ class CorpusStatsSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("s16-parity").toString
     val built = Ivf.build(e, col("vec_id"), col("embedding"), k = 8)
     Ivf.persist(built, idx)
-    built.assigned.unpersist(blocking = false)
     val sweep = Ivf.searchSweepAt(spark, idx, q, topK = 3,
       budgets = Seq(1, 3, 8))
     Seq(1, 3, 8).foreach { np =>

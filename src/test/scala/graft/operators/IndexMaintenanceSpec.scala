@@ -69,7 +69,6 @@ class IndexMaintenanceSpec extends SparkSpec {
       dim = 64, m = 16, k = 16, iters = 3)
     val dir = tmp("pq-recover")
     Pq.persist(index, dir)
-    index.coded.unpersist(blocking = false)
     val expected = Pq.searchAt(spark, dir, queries, topK = 5)
       .collect().toSeq
     // crash between the flat compact's two renames: the base itself is

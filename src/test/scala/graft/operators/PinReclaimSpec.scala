@@ -5,40 +5,22 @@ import graft.queries.{AdsbQueries, DocQueries}
 
 /** Round-11 (verdict ask #1): every pin the ENGINE creates must be
   * released by the engine — a resident-service caller inherits no
-  * cache-catalog entry from running a query. Two layers:
+  * cache-catalog entry from running a query. Every way a query holds
+  * a frame is an RDD-scoped local checkpoint: [[HammingNN.nearest]]'s
+  * eager one over its hash base, and [[Dedup.share]]'s lazy one
+  * (index builds included). The ContextCleaner reclaims those blocks
+  * when the frame is dropped; none is a cache-catalog entry.
   *
-  *  - [[HammingNN.nearest]] needs its hash frame resident for the
-  *    routing count + self-join; round-11 it localCheckpoints the
-  *    base (RDD-scoped blocks, ContextCleaner-reclaimed) instead of
-  *    the round-10 persist(), so NO caller-visible SQL-cache entry
-  *    exists in ANY share mode.
-  *  - `Dedup.share()` in its resident-service mode
-  *    (`graft.share.mode=checkpoint`) uses RDD-scoped localCheckpoint
-  *    blocks, which the ContextCleaner reclaims when the frame is
-  *    dropped — also no cache-catalog entry.
-  *
-  * Pin: after each HammingNN/share-using query's action completes
-  * under checkpoint share mode, the SQL cache catalog is EMPTY and at
-  * most a handful of RDD-scoped checkpoint block sets (the results'
-  * own, self-reclaiming) survive. The default `cache` mode remains
-  * the one-shot/Bench mode, where Verify's per-query clearCache is
-  * the documented discipline.
+  * Pin: after each query's action completes, the SQL cache catalog is
+  * EMPTY and at most a handful of RDD-scoped checkpoint block sets
+  * (the results' own, self-reclaiming) survive.
   */
 class PinReclaimSpec extends SparkSpec {
-
-  private def withCheckpointShare[A](f: => A): A = {
-    val prev = sys.props.get("graft.share.mode")
-    sys.props("graft.share.mode") = "checkpoint"
-    try f finally prev match {
-      case Some(v) => sys.props("graft.share.mode") = v
-      case None => sys.props.remove("graft.share.mode")
-    }
-  }
 
   private def run(name: String,
       defs: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame],
-      dir: String, maxRddPins: Int): Unit = withCheckpointShare {
+      dir: String, maxRddPins: Int): Unit = {
     spark.catalog.clearCache()
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -79,7 +61,7 @@ class PinReclaimSpec extends SparkSpec {
   test("mm19/mm20/mm21 (round-13 NN composites) release their pins") {
     // mm19: dictionary + NN checkpoint; mm20: shared lattice + NN
     // members share + mm19's hash chain; mm21: shared segment frame
-    // + NN checkpoint — all RDD-scoped under checkpoint share mode
+    // + NN checkpoint — all RDD-scoped
     run("mm19_frame_phash", AdsbQueries.defs, "unused", maxRddPins = 2)
     run("mm20_shot_medoids", AdsbQueries.defs, "unused", maxRddPins = 3)
     run("mm21_segment_neardup", AdsbQueries.defs, "unused",
@@ -99,5 +81,15 @@ class PinReclaimSpec extends SparkSpec {
   test("d10c capped index match releases its pins") {
     run("d10c_index_match_capped", DocQueries.defs,
       "/root/testdata/sf0.001", maxRddPins = 3)
+  }
+
+  test("s2 in-memory IVF search releases its index build") {
+    run("s2_ivf_topk", DocQueries.defs, "/root/testdata/sf0.001",
+      maxRddPins = 2)
+  }
+
+  test("s7 SemDeDup releases its index build") {
+    run("s7_semdedup", DocQueries.defs, "/root/testdata/sf0.001",
+      maxRddPins = 2)
   }
 }

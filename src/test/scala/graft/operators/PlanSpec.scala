@@ -11,6 +11,27 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
 
+  /** [[plan]] preceded by the plans the query's local checkpoints ran
+    * while it was defined: a `Dedup.share`d frame reaches the final
+    * plan only as an RDD scan. */
+  private def planWithShares(name: String): String = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val shared = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") shared.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val p = plan(name)
+      org.apache.spark.sql.graftbridge.Bridge
+        .drainListenerBus(spark.sparkContext)
+      (shared.toArray.toSeq :+ p).mkString("\n")
+    } finally spark.listenerManager.unregister(l)
+  }
+
   test("qc top-10 is a parallel TakeOrderedAndProject, not a global window sort") {
     val p = plan("qc_top_customers")
     assert(p.contains("TakeOrderedAndProject"))
@@ -301,7 +322,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("qy/qz transition+CUSUM windows are keyed; their tiny sides broadcast") {
-    val qy = plan("qy_markov_transitions")
+    val qy = planWithShares("qy_markov_transitions")
     // the lead() window partitions by user — never a global window
     assert(qy.contains("Window"), qy)
     assert(!qy.contains("Window [") ||

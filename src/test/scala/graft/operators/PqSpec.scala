@@ -124,6 +124,5 @@ class PqSpec extends SparkSpec {
     val mem = Pq.search(index, queries, topK = 5).collect().toSeq
     val at = Pq.searchAt(spark, dir, queries, topK = 5).collect().toSeq
     assert(at === mem)
-    index.coded.unpersist(blocking = false)
   }
 }

@@ -26,7 +26,6 @@ class RebuildSpec extends SparkSpec {
     val index = Ivf.build(emb.where(col("vec_id") % 2 === 0),
       col("vec_id"), col("embedding"), k = 16)
     Ivf.persist(index, p)
-    index.assigned.unpersist(blocking = false)
     Ivf.appendPersisted(spark, p, emb.where(col("vec_id") % 2 === 1),
       col("vec_id"), col("embedding"))
     p
@@ -59,7 +58,6 @@ class RebuildSpec extends SparkSpec {
       .resolve("idx").toString
     val fi = Ivf.build(emb, col("vec_id"), col("embedding"), k = 16)
     Ivf.persist(fi, fresh)
-    fi.assigned.unpersist(blocking = false)
     val freshRecall = recallAt(fresh)
     IndexMaintenance.rebuildPersisted(spark, p, k = 16)
     val postRecall = recallAt(p)
@@ -121,7 +119,6 @@ class RebuildSpec extends SparkSpec {
         spark.read.parquet(p).select(col("id"), col("vec")),
         col("id"), col("vec"), k = 16)
       Ivf.persist(idx, shadow)
-      idx.assigned.unpersist(blocking = false)
       IndexMaintenance.writeManifest(fs, shadow, p,
         IndexMaintenance.dataFilesUnder(fs, p))
       fs.create(new Path(s"$shadow/_READY"), true).close()

@@ -32,7 +32,6 @@ class ReindexSpec extends SparkSpec {
     val index = Ivf.build(e.where(col("vec_id") % 2 === 0),
       col("vec_id"), col("embedding"), k = 16)
     Ivf.persist(index, p)
-    index.assigned.unpersist(blocking = false)
     Ivf.appendPersisted(spark, p, e.where(col("vec_id") % 2 === 1),
       col("vec_id"), col("embedding"))
     val preRecall = recallAt(p)
@@ -105,7 +104,6 @@ class ReindexSpec extends SparkSpec {
       val index = Ivf.build(e.where(col("vec_id") % 2 === 0),
         col("vec_id"), col("embedding"), k = 16)
       Ivf.persist(index, p)
-      index.assigned.unpersist(blocking = false)
       Ivf.appendPersisted(spark, p, e.where(col("vec_id") % 2 === 1),
         col("vec_id"), col("embedding"))
       p
