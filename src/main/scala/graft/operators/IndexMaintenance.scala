@@ -414,8 +414,10 @@ object IndexMaintenance {
         .select(col("id"), col("vec"))
     var seen = dataFilesUnder(fs, base)
     require(seen.nonEmpty, s"rebuildPersisted: no data files at $base")
-    val idx = Ivf.build(readRows(seen), col("id"), col("vec"), k, iters,
+    val built = Ivf.build(readRows(seen), col("id"), col("vec"), k, iters,
       trainSampleCap)
+    // read twice: the shadow write and its stats below
+    val idx = built.copy(assigned = Dedup.share(built.assigned))
     Ivf.persist(idx, shadow)
     def statsOf(df: DataFrame): Map[Int, (Long, Long)] =
       df.groupBy(col("cid"))

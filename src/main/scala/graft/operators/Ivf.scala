@@ -110,8 +110,10 @@ object Ivf {
     * Training is bounded: Lloyd runs over a deterministic hash-stride
     * sample of ~`trainSampleCap` vectors (the same sampling as
     * [[Pq.build]] — quantizer quality saturates at a bounded sample),
-    * then ONE full-corpus assign produces the inverted lists, held
-    * for the searches through [[Dedup.share]]. Build
+    * then ONE full-corpus assign produces the inverted lists, as a
+    * plan: a caller that reads them more than once shares them
+    * ([[Dedup.share]]) itself, so a build read once (one search, one
+    * persist) materializes nothing. Build
     * cost at 100 TB is a constant-size training job plus a single
     * map-side assign scan — no full-corpus scan inside the loop. */
   def build(corpus: DataFrame, idCol: Column, vecCol: Column,
@@ -145,7 +147,7 @@ object Ivf {
     import spark.implicits._
     val centroids = codebook.toSeq
       .map { case (cid, v, _) => (cid, v) }.toDF("cid", "cvec")
-    Index(centroids, Dedup.share(assign(vectors, codebook)), codebook)
+    Index(centroids, assign(vectors, codebook), codebook)
   }
 
   /** (qid, qvec, cid) probe rows: each query paired with its `nProbe`

@@ -38,8 +38,8 @@ object SemDedup {
     * arithmetic.
     *
     * The corpus assignment materializes once, through
-    * [[Ivf.build]]'s [[Dedup.share]], for its four consumers: the
-    * cluster sizes, both self-join sides and the output spine.
+    * [[Dedup.share]], for its four consumers: the cluster sizes, both
+    * self-join sides and the output spine.
     *
     * `maxClusterSize` is the d4v mega-bucket guard with a working
     * fallback (round-5 verdict ask #3): a degenerate quantizer (or
@@ -58,7 +58,7 @@ object SemDedup {
       maxClusterSize: Long = 1L << 20, megaBlocks: Int = 16): DataFrame = {
     val ivf = Ivf.build(corpus, idCol.cast("long"), vecCol,
       kClusters, iters, trainSampleCap)
-    val rows = ivf.assigned
+    val rows = Dedup.share(ivf.assigned)
       .withColumn("nv", sqrt(dotF(col("vec"), col("vec"))))
     val sizes = rows.groupBy(col("cid"))
       .agg(count(lit(1)).as("_sz"))

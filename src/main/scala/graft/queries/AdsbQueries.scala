@@ -515,10 +515,9 @@ object AdsbQueries {
         stream.toDS())
       else graft.streaming.AdsbStream.sessionize(stream.toDS())
     val q =
-      try sessionized
+      try graft.streaming.AdsbStream.startQuery(s, sessionized
         .writeStream.format("memory").queryName(name)
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .start()
+        .outputMode("append").option("checkpointLocation", ckpt))
       finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     try {
       // in-order: two data micro-batches (the 3-batch grain is

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.adsb.{AdsbMsg, AdsbPipeline, FlightStateMachine, Sbs}
 import graft.adsb.FlightStateMachine.{Out, State}
@@ -198,6 +199,12 @@ object AdsbStream {
     * `dropDuplicatesWithinWatermark` collapses them with state bounded
     * by the watermark delay. Off by default: batch/stream parity specs
     * compare against the reference's duplicate-keeping behavior.
+    *
+    * The checkpoint's files (offsets, commits, the file source's log,
+    * state-store deltas) go through [[NioCheckpointFileManager]]
+    * ([[startQuery]]), so a trigger's commit forks no `chmod` or
+    * `readlink` and leaves no Hadoop `.crc` side files. A checkpoint
+    * Spark's default manager wrote restarts unchanged.
     */
   def start(lines: DataFrame, outDir: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
@@ -218,7 +225,8 @@ object AdsbStream {
       d.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(parts: _*).parquet(s"$outDir/$path")
-    sessionize(msgs, watermarked = dedupReplays).writeStream
+    startQuery(lines.sparkSession, sessionize(msgs,
+        watermarked = dedupReplays).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -230,8 +238,7 @@ object AdsbStream {
           Seq("flight") -> w("batch_id")("flights"),
           Seq("landing") -> w("batch_id")("landings"),
           Seq("takeoff") -> w("batch_id")("takeoffs"))
-      }
-      .start()
+      })
   }
 
   /** S6+T11 together: the reference's LIVE path — sessionized output
@@ -250,14 +257,15 @@ object AdsbStream {
     * epoch), so each table is first purged of the incoming `batch_id`
     * — the standard delete-before-insert keyed on the epoch. A retry
     * then converges to exactly-once instead of duplicating the
-    * batch. */
+    * batch. Checkpoint files are written as in [[start]]. */
   def startJdbc(lines: DataFrame, url: String, user: String,
       password: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
     def w(table: String, cols: String*)(d: DataFrame): Unit =
       graft.sources.Sinks.writeJdbc(d.select(cols.map(col): _*), url,
         table, user, password)
-    sessionize(Sbs.messages(lines)).writeStream
+    startQuery(lines.sparkSession, sessionize(Sbs.messages(lines))
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -273,8 +281,36 @@ object AdsbStream {
             "batch_id"),
           Seq("landing", "takeoff") -> w("events_live", "kind", "hexident",
             "session_start", "time", "runway", "batch_id"))
+      })
+  }
+
+  /** `w.start()` with the query's checkpoint files written through
+    * [[NioCheckpointFileManager]]. Spark builds a query's checkpoint
+    * managers from the session conf's [[NioCheckpointFileManager.Key]],
+    * so it is set around the start, and the caller's value is restored
+    * once the query has built its sources. The query keeps the
+    * setting: its offsets and commits logs and its state stores are
+    * built on the session clone `StreamExecution` makes when it is
+    * constructed. A source, though, is built from the session that
+    * read it (the caller's), on the query's thread after `start`
+    * returns; a file source's log is among them, hence the wait. A
+    * query that fails while it starts is returned as it is: its
+    * failure surfaces where it would have, in `awaitTermination`. */
+  private[graft] def startQuery(spark: SparkSession,
+      w: DataStreamWriter[_]): StreamingQuery = {
+    val key = NioCheckpointFileManager.Key
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[NioCheckpointFileManager].getName)
+    try {
+      val q = w.start()
+      q match {
+        case r: StreamingQueryWrapper =>
+          try r.streamingQuery.awaitInitialization(Long.MaxValue)
+          catch { case _: StreamingQueryException => () }
+        case _ => ()
       }
-      .start()
+      q
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** The one sink rule of [[start]] and [[startJdbc]]. Each `(kinds,
